@@ -18,7 +18,6 @@ from .windows import (
     session_gap,
     sessionize,
     text_stats,
-    text_stats_fast,
     time_rolling,
 )
 
@@ -50,6 +49,5 @@ __all__ = [
     "session_gap",
     "sessionize",
     "text_stats",
-    "text_stats_fast",
     "time_rolling",
 ]

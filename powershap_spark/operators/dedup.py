@@ -407,7 +407,12 @@ def minhash_dedup(
 ) -> DataFrame:
     """Near-dup removal: LSH candidates -> estimated-Jaccard filter ->
     drop the higher id of each surviving pair (greedy, transitive via
-    keeping only ids that are never a 'b' side)."""
+    keeping only ids that are never a 'b' side).
+
+    ``id_col`` must be unique. Signatures aggregate by id, so rows that
+    share an id merge into one element-wise-min signature (that of the
+    union of their shingles) and are kept or dropped together. This is
+    not checked at runtime: the check would cost a full-table job."""
     # persist the signatures: the LSH self-join reads them from both sides
     # and recomputing the shingle+hash expression tree twice dominates
     # runtime. Registered with the tracked-persist discipline so callers
@@ -457,7 +462,12 @@ def build_minhash_signature_store(
     a<b<c with pairs (a,b),(b,c) but not (a,c), c is dropped because of the
     already-dropped b. Storing only survivors would silently re-admit c.
     Signatures are a pure function of (id, text), so re-appending a shard
-    is idempotent by id."""
+    is idempotent by id.
+
+    ``id_col`` must be unique: rows that share an id merge into ONE
+    element-wise-min signature (that of the union of their shingles).
+    This is not checked at runtime: the check would cost a full-table
+    job."""
     return _signature_frame(
         df, text_col, id_col, num_hashes, shingle_n, hash_family, seed=seed
     )

@@ -389,7 +389,6 @@ def lm_perplexity(
     sep: str = " ",
     id_col: str = "doc_id",
     text_col: str = "text",
-    counts: str = "window",
 ):
     """Corpus-trained n-gram LM quality score — the perplexity filter of
     CCNet (Wenzek et al., arXiv:1911.00359), self-trained: an add-k-
@@ -422,30 +421,15 @@ def lm_perplexity(
     standard content-hash contract; the DuckDB oracle counts the token
     STRINGS, so the value-green driver row is that contract's evidence.
 
-    ``counts`` selects how the corpus-wide C1/C2 attach to the exploded
-    relation — identical counts (exact ints), different physical plans:
-
-    - ``"window"`` (default) — the two chained window counts above: the
-      exploded relation shuffles+SORTS twice, per-key state is one
-      count, nothing materializes.
-    - ``"join"`` — ``groupBy(hash).count()`` + equi-join back: map-side
-      combined aggregations and no sorts. MEASURED NEGATIVE at the chain
-      corpus (320k docs / 13M bigram positions, local[32], interleaved
-      min-of-3: 35.7 s vs 17.1 s for the window form — the exploded
-      relation pays FOUR exchanges here, two agg + two join, vs the
-      window form's two sort-exchanges; ANALYSIS_r07 §5). Kept opt-in
-      for genuinely zipf-heavy corpora where map-side combine collapses
-      the shuffle (this synthetic corpus's near-uniform bigrams give the
-      combiner nothing); counts are exact ints either way, so outputs
-      are value-identical (parity pytest)."""
+    Window counts, not groupBy+join-back: the join form pays four
+    exchanges and measured 2.1-2.8x slower even on a zipf corpus
+    (ANALYSIS_r07 §5, OPTIMIZATION_r08.md)."""
     import re as _re
 
     from pyspark.sql import Window
 
     if add_k <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
-    if counts not in ("window", "join"):
-        raise ValueError(f"unknown counts mode {counts!r}")
 
     pat = _re.escape(sep)
     toks = F.split(F.col(text_col), pat, -1)
@@ -478,14 +462,9 @@ def lm_perplexity(
     ).agg(F.count_distinct("__th").alias("__V"))
 
     k = F.lit(float(add_k))
-    if counts == "window":
-        counted = ex.withColumn(
-            "__c2", F.count("*").over(Window.partitionBy("__bh"))
-        ).withColumn("__c1", F.count("*").over(Window.partitionBy("__ch")))
-    else:
-        c2 = ex.groupBy("__bh").agg(F.count("*").alias("__c2"))
-        c1 = ex.groupBy("__ch").agg(F.count("*").alias("__c1"))
-        counted = ex.join(c2, "__bh").join(c1, "__ch")
+    counted = ex.withColumn(
+        "__c2", F.count("*").over(Window.partitionBy("__bh"))
+    ).withColumn("__c1", F.count("*").over(Window.partitionBy("__ch")))
     scored = counted.crossJoin(F.broadcast(vocab)).select(
         id_col,
         F.log((F.col("__c2") + k) / (F.col("__c1") + k * F.col("__V"))).alias(
@@ -1111,62 +1090,24 @@ def tokens_to_ids(
     id_col: str = "doc_id",
     out_col: str = "input_ids",
     unk_id: int = 0,
-    method: str = "join",
-    max_map_size: int = 256,
 ):
     """Map a per-doc token array to id arrays through a vocab table
     (``build_vocab`` output or any ``(token, id)`` frame);
     out-of-vocabulary tokens map to ``unk_id`` and are counted in
     ``n_unk``. Appends ``out_col: array<int>`` + ``n_unk``; docs with
-    empty token arrays keep an empty id array. Two value-identical paths
-    (parity pytest):
+    empty token arrays keep an empty id array.
 
-    - ``method="join"`` (default) — posexplode -> BROADCAST join ->
-      regroup in position order; one corpus shuffle (the regroup by
-      doc). This is the right path for ANY realistic vocabulary: a
-      broadcast hash join probes a real hash table per token.
-    - ``method="map"`` — embed the collected vocab as a literal map and
-      map as a PURE PROJECTION (zero shuffle). MEASURED NEGATIVE at
-      tokenizer scale (ANALYSIS_r06 §7c): Spark's literal-map lookup is
-      a LINEAR SCAN per probe (ArrayBasedMapData carries no hash
-      index), so a 4096-entry map ran ~5x SLOWER end-to-end than the
-      join path despite the saved shuffle. Kept for TINY vocabs (label
-      sets, special-token tables) where the scan is a few comparisons
-      and the zero-shuffle plan fuses with any scan; falls back to the
-      join path above ``max_map_size`` entries."""
+    Plan: posexplode -> BROADCAST join -> regroup in position order; one
+    corpus shuffle (the regroup by doc). A broadcast hash join probes a
+    real hash table per token; a zero-shuffle literal-map projection
+    measured ~5x slower at a 4096-entry vocab, because Spark's literal-map
+    lookup is a linear scan per probe (ANALYSIS_r06 §7c)."""
     from pyspark.sql.functions import broadcast
 
-    if method not in ("map", "join"):
-        raise ValueError(f"unknown method {method!r}")
     # the reserved unk row is a SENTINEL, not a match target: a corpus
     # token spelled like the unk literal must be counted OOV (and map to
-    # unk_id via the miss path), in both methods
+    # unk_id via the miss path)
     vocab = vocab.filter(F.col("id") != int(unk_id))
-    if method == "map":
-        rows = vocab.select("token", "id").collect()  # vocab-sized
-        if len(rows) <= int(max_map_size):
-            m = F.map_from_arrays(
-                F.lit([r["token"] for r in rows]),
-                F.lit([int(r["id"]) for r in rows]),
-            )
-            raw = F.transform(
-                F.coalesce(
-                    F.col(tokens_col), F.array().cast("array<string>")
-                ),
-                lambda t: F.element_at(m, t),
-            )
-            return docs.withColumns(
-                {
-                    out_col: F.transform(
-                        raw,
-                        lambda v: F.coalesce(v, F.lit(int(unk_id))).cast("int"),
-                    ),
-                    "n_unk": F.size(F.filter(raw, lambda v: v.isNull()))
-                    .cast("int"),
-                }
-            )
-        # vocab too large for an expression literal: fall through to join
-
     ex = docs.select(
         id_col, F.posexplode_outer(tokens_col).alias("__pos", "__tok")
     )

@@ -241,40 +241,22 @@ def transition_counts(
 # --- W8: per-turn text stats (scalar exprs feeding W1/W2) --------------------
 
 
-def text_stats_fast(text_col: str = "text") -> dict[str, Column]:
-    """Scalar per-turn text statistics via ``translate``/``length`` only —
-    NO regex. Java regex costs ~80us/row on transcript-sized strings
-    (measured: the regex variant burned 550 CPU-s on a 6.7M-row pass where
-    this one burns ~30); at 10^12 turns the difference is the bill.
-
-    Token semantics assume single-space-separated text (true for transcript
-    corpora normalized at ingest); for arbitrary whitespace use
-    ``text_stats`` (regex, exact)."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_spaces = n_chars - F.length(F.translate(t, " ", ""))
-    n_tokens = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(n_spaces + 1)
-    upper = n_chars - F.length(F.translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", ""))
-    return {
-        "text_len": n_chars.cast("int"),
-        "n_tokens": n_tokens.cast("int"),
-        "avg_token_len": F.when(
-            n_tokens > 0, (n_chars - n_spaces) / n_tokens
-        ).cast("double"),
-        "n_punct": (n_chars - F.length(F.translate(t, ".,;:!?", ""))).cast("int"),
-        "upper_ratio": F.when(n_chars > 0, upper / n_chars).cast("double"),
-    }
-
-
 def text_stats_ints(text_col: str = "text") -> dict[str, Column]:
-    """Shuffle-lean integer projection of ``text_stats_fast``: ONLY int32
-    scalars. The ratio features are reconstructed AFTER the per-conversation
-    window shuffle from these ints (``avg_token_len = n_nonspace/n_tokens``)
-    — identical double values, but the rows carried through the window
-    exchange+sort hold four 4-byte ints instead of mixed ints/doubles. At
-    10^12 turns the window shuffle is the dominant byte mover, so every
-    column dropped or narrowed here is ~8 bytes/row of exchange+sort+spill
-    traffic saved (the 100-TB lever VERDICT r2 'Next round' #1 names)."""
+    """Per-turn text statistics via ``replace``/``translate``/``length``
+    only — NO regex: Java regex costs ~80us/row on transcript-sized strings
+    (the regex variant burned 550 CPU-s on a 6.7M-row pass where a
+    translate-based one burns ~30). Token semantics assume
+    single-space-separated text (true for transcript corpora normalized at
+    ingest); for arbitrary whitespace use ``text_stats`` (regex, exact).
+
+    Shuffle-lean: ONLY int32 scalars. The ratio features are reconstructed
+    AFTER the per-conversation window shuffle from these ints
+    (``avg_token_len = n_nonspace/n_tokens``) — identical double values,
+    but the rows carried through the window exchange+sort hold four
+    4-byte ints instead of mixed ints/doubles. At 10^12 turns the window
+    shuffle is the dominant byte mover, so every column dropped or
+    narrowed here is ~8 bytes/row of exchange+sort+spill traffic saved
+    (the 100-TB lever VERDICT r2 'Next round' #1 names)."""
     t = F.col(text_col)
     n_chars = F.length(t)
     # r8 expression choice (values identical, measured at sf1.0):

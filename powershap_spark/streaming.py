@@ -96,7 +96,7 @@ def stream_transcripts(
 
 
 def _tok_count(texts: pd.Series) -> pd.Series:
-    """Single-space token count — EXACTLY windows.text_stats_fast's
+    """Single-space token count — EXACTLY windows.text_stats_ints's
     n_tokens (space count + 1, 0 for blank), so streamed n_tokens_avg_past
     is bit-comparable to the batch feature build on the same corpus."""
     t = texts.fillna("")

@@ -245,32 +245,24 @@ def test_gb_stumps_model_on_spark_path(spark):
     assert imp["sym"] > 10 * max(imp["noise_a"], imp["noise_b"])
 
 
-def test_arrow_explain_path_matches_grouped_map(spark, clf_xy):
-    """The OPT-IN mapInArrow batch execution (zero-copy contiguous
-    part_id slices over the cached pre-sorted matrix; measured slower at
-    the flagship shape, so grouped-map stays the default) must be
-    BIT-IDENTICAL to the groupBy().applyInPandas default — same blocks,
-    same order, same float32 partials."""
-    from powershap_spark.engine import SparkExplainBackend
+def test_checkpoint_metrics_rows_per_iteration(spark, clf_xy, tmp_path):
+    """metrics.jsonl's rows_per_iteration is the input row count: each
+    (iteration, part_id) block counts once, not once per feature row."""
+    import json
+
+    from powershap_spark.engine import CheckpointStore, SparkExplainBackend
 
     X, y = clf_xy
     sdf = _as_spark(spark, X, y)
-    feats = list(X.columns)
-    kw = dict(
-        n_parts=4, sort_cols=["row_id"], min_rows_per_part=50, probe_mode="keyed"
+    be = SparkExplainBackend(
+        sdf, list(X.columns), "label", n_parts=2, sort_cols=["row_id"],
+        min_rows_per_part=50, store=CheckpointStore(str(tmp_path), "m"),
     )
-    be_a = SparkExplainBackend(sdf, feats, "label", arrow_explain=True, **kw)
-    be_g = SparkExplainBackend(sdf, feats, "label", arrow_explain=False, **kw)
-    assert be_a.n_parts == 4 and be_g.n_parts == 4
+    assert be.n_parts == 2
     try:
-        ra = be_a.explain(3, 0).sort_index()
-        rg = be_g.explain(3, 0).sort_index()
+        be.explain(2, 0)
     finally:
-        be_a.release()
-        be_g.release()
-    assert list(ra.index) == list(rg.index)
-    assert list(ra.columns) == list(rg.columns)
-    assert (
-        ra.values.astype("float32").view("uint32")
-        == rg.values.astype("float32").view("uint32")
-    ).all()
+        be.release()
+    with open(tmp_path / "m" / "metrics.jsonl") as f:
+        (rec,) = [json.loads(line) for line in f]
+    assert rec["rows_per_iteration"] == len(X)

@@ -99,9 +99,6 @@ def test_selection_batch_zero_exchange_zero_sort(spark, clf_xy):
     )
     import re
 
-    from powershap_spark.engine import _make_arrow_fn
-
-    # grouped-map DEFAULT path (also the single_batch path)
     out = be.df.groupBy("part_id").applyInPandas(fn, schema=_RESULT_SCHEMA)
     p = _plan(out)
     assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas\b", p)) == 1
@@ -111,16 +108,6 @@ def test_selection_batch_zero_exchange_zero_sort(spark, clf_xy):
     batch_seg = p.split("InMemoryTableScan", 1)[0]
     assert "Exchange" not in batch_seg, p
     assert "Sort" not in batch_seg, p
-
-    # opt-in mapInArrow path (arrow_explain=True; measured slower at the
-    # flagship shape, grouped-map is the default): a pure per-partition
-    # map over the cached layout — no grouping operator, zero Exchange/Sort
-    out_a = be.df.mapInArrow(_make_arrow_fn(fn), schema=_RESULT_SCHEMA)
-    pa_ = _plan(out_a)
-    assert "MapInArrow" in pa_ or "PythonMapInArrow" in pa_, pa_
-    batch_seg_a = pa_.split("InMemoryTableScan", 1)[0]
-    assert "Exchange" not in batch_seg_a, pa_
-    assert "Sort" not in batch_seg_a, pa_
     be.release()
 
 

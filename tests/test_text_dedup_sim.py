@@ -898,6 +898,35 @@ def test_incremental_minhash_dropped_doc_still_suppresses(spark):
     assert kept.count() == 0
 
 
+def test_signature_frame_merges_duplicate_ids(spark):
+    """id_col must be unique: the signature aggregation groups by id, so
+    rows sharing an id merge into ONE element-wise-min signature (the
+    signature of the union of their shingle sets)."""
+    from powershap_spark.operators.dedup import (
+        build_minhash_signature_store,
+        hashed_shingles,
+    )
+
+    a, b = "alpha beta gamma delta epsilon", "zeta eta theta iota kappa"
+    df = spark.createDataFrame(
+        pd.DataFrame([(0, a), (0, b), (1, a)], columns=["doc_id", "text"])
+    )
+    per_text = {
+        r.text: list(r.m)
+        for r in df.select(
+            "text", minhash_signature(hashed_shingles("text", 3), 32).alias("m")
+        ).collect()
+    }
+    got = {
+        r.doc_id: list(r.minhash)
+        for r in build_minhash_signature_store(df, num_hashes=32).collect()
+    }
+    assert sorted(got) == [0, 1]
+    assert got[0] == [min(x, y) for x, y in zip(per_text[a], per_text[b])]
+    assert got[0] not in (per_text[a], per_text[b])
+    assert got[1] == per_text[a]
+
+
 def test_signature_store_append_idempotent(spark, docs):
     """Re-appending the same shard's signatures (failed-run retry) must not
     duplicate store rows, and the appended store equals old ∪ new by id."""
@@ -926,6 +955,8 @@ def test_bucketed_banded_store_parity_append_and_plan(spark, docs, tmp_path):
     (3) the store side of the old-vs-new band join is a bucketed scan with
         ZERO exchange — only the new shard shuffles (the 10^12-scale
         property the layout exists for, ANALYSIS_r06 §6)."""
+    import re
+
     from powershap_spark.operators.dedup import (
         _banded,
         append_banded_signatures,
@@ -968,22 +999,43 @@ def test_bucketed_banded_store_parity_append_and_plan(spark, docs, tmp_path):
                 & (F.col("a.band_hash") == F.col("b.band_hash"))
                 & (F.col("a.__id") < F.col("b.__id")),
             )
-            plan = j._jdf.queryExecution().executedPlan().toString()
+            ep = j._jdf.queryExecution().executedPlan()
+            if ep.nodeName() == "AdaptiveSparkPlan":
+                ep = ep.executedPlan()
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan, plan
-        # store-side contract: the bucketed store is NEVER re-shuffled.
-        # Exchanges allowed: the band-key shuffle of the shard side, plus
-        # the shard signature aggregation's hashpartitioning(doc_id)
-        # (r8: signatures come from explode+groupBy — value-identical,
-        # 2.2x faster; its exchange carries one ~num_hashes*8B row per
-        # SHARD doc, the store side still contributes zero exchanges).
-        band_ex = plan.count("Exchange hashpartitioning(band_id")
-        assert band_ex == 1, plan  # shard only
-        for line in plan.splitlines():
-            if "Exchange hashpartitioning" in line:
-                assert "band_id" in line or "doc_id" in line, line
+
+        def children(node):
+            c = node.children()
+            return [c.apply(i) for i in range(c.size())]
+
+        smj, todo = None, [ep]
+        while todo and smj is None:
+            node = todo.pop()
+            if node.nodeName() == "SortMergeJoin":
+                smj = node
+            todo.extend(children(node))
+        assert smj is not None, ep.toString()
+        sides = [c.toString() for c in children(smj)]
+        store = [t for t in sides if "Bucketed: true" in t]
+        assert len(store) == 1, ep.toString()
+        # store-side contract: the bucketed store is NEVER re-shuffled
+        assert "Exchange" not in store[0], store[0]
+        # shard side: the band-key shuffle plus the shard signature
+        # aggregation's hashpartitioning(doc_id) (explode+groupBy, one
+        # ~num_hashes*8B row per SHARD doc). The cached signatures print
+        # that one Exchange under their final and initial plans (two
+        # plan_ids), and the cached bands print both copies twice
+        (shard,) = [t for t in sides if "Bucketed: true" not in t]
+        ex_lines = [ln for ln in shard.splitlines() if "Exchange" in ln]
+        ex_ids = re.findall(r"Exchange .*\[plan_id=(\d+)\]", shard)
+        assert len(ex_ids) == len(ex_lines) == 5, shard
+        assert len(set(ex_ids)) == 3, shard
+        assert sum("hashpartitioning(band_id" in ln for ln in ex_lines) == 1, shard
+        assert all(
+            "hashpartitioning(band_id" in ln or "hashpartitioning(doc_id" in ln
+            for ln in ex_lines
+        ), shard
 
         # (2) append: idempotent by id, both tables grow exactly once
         n_bands = spark.table(f"{prefix}_bands").count()
@@ -1833,19 +1885,6 @@ def test_build_vocab_and_tokens_to_ids(spark):
     assert list(out.loc[2, "input_ids"]) == []
     assert list(out.loc[3, "input_ids"]) == [0, 0] and out.loc[3, "n_unk"] == 2
 
-    # the opt-in literal-map path and its forced fallback (tiny
-    # max_map_size -> back to join) are value-identical to the default
-    for kw in ({"method": "map"}, {"method": "map", "max_map_size": 1}):
-        alt = (
-            tokens_to_ids(toks, vocab, **kw)
-            .toPandas()
-            .set_index("doc_id")
-            .sort_index()
-        )
-        for i in out.index:
-            assert list(alt.loc[i, "input_ids"]) == list(out.loc[i, "input_ids"])
-            assert alt.loc[i, "n_unk"] == out.loc[i, "n_unk"]
-
     # a corpus containing the LITERAL unk token: excluded from ranks,
     # maps to unk id, counted as OOV
     trap = spark.createDataFrame(
@@ -1867,15 +1906,10 @@ def test_build_vocab_and_tokens_to_ids(spark):
 
     p = plan(build_vocab(docs, size=3))
     assert "TakeOrderedAndProject" in p, p
-    p2 = plan(tokens_to_ids(toks, vocab))  # default join path
+    p2 = plan(tokens_to_ids(toks, vocab))
     assert re.search(r"BroadcastHashJoin|BroadcastNestedLoop", p2), p2
     assert "BroadcastNestedLoop" not in p2  # it is a real equi broadcast join
-    # opt-in literal-map path: PURE projection — no join, no Exchange
-    p3 = plan(tokens_to_ids(toks, vocab, method="map"))
-    assert "Join" not in p3 and "Exchange" not in p3, p3
 
-    with pytest.raises(ValueError):
-        tokens_to_ids(toks, vocab, method="bogus")
     with pytest.raises(ValueError):
         build_vocab(docs, size=0)
 
@@ -1895,28 +1929,3 @@ def test_build_vocab_accepts_pretokenized_arrays(spark):
     via_arr = build_vocab(toks, size=8, text_col="tokens").toPandas()
     assert via_text.sort_values("id").values.tolist() == \
         via_arr.sort_values("id").values.tolist()
-
-
-def test_lm_perplexity_counts_join_parity(spark):
-    """counts="join" (groupBy+join corpus counts) must be value-identical
-    to the default window form — counts are exact ints, the score math
-    identical; only the physical plan differs (measured 2x slower on the
-    near-uniform synthetic corpus, kept opt-in — ANALYSIS_r07 §5)."""
-    from powershap_spark.operators.text import lm_perplexity
-
-    texts = [
-        "the cat sat on the mat",
-        "the cat sat on the hat",
-        "zz qq xx vv",  # gibberish: high perplexity
-        "the the the the",
-        "",
-        "one",
-    ]
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    )
-    a = lm_perplexity(docs).orderBy("doc_id").toPandas()
-    b = lm_perplexity(docs, counts="join").orderBy("doc_id").toPandas()
-    assert a.fillna(-1).values.tolist() == b.fillna(-1).values.tolist()
-    with pytest.raises(ValueError):
-        lm_perplexity(docs, counts="broadcast")

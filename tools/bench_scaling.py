@@ -279,7 +279,7 @@ def write_report(n, sf, repeat):
         "component (heap, GC, allocator) from that bound.",
         "",
         "The bound is MEASURED, not inferred (round 5,",
-        "`tools/bench_stream.py` + BENCH/ANALYSIS_r05.md §3b-bis): a",
+        "BENCH/ANALYSIS_r05.md §3b-bis): a",
         "multiprocess STREAM triad puts this host's best-case N -> 4N",
         "efficiency for any pure-streaming workload at ~0.49 (64 GB/s",
         "aggregate at 8 processes vs 124 GB/s at 32). The window cells sit",
@@ -306,9 +306,8 @@ def write_report(n, sf, repeat):
         "  at the DRAM wall; quality-classifier featurize 0.46 one-time vs",
         "  0.74 recurring per-epoch, two-point decomposition). Same",
         "  fresh-JVM interleaved min-of-N protocol as the cells above.",
-        "- Round-7 operator cells (BENCH/ANALYSIS_r07.md §6,",
-        "  tools/bench_join_encode.py over synth.events with a 10% hot",
-        "  user): range_join 0.70 at 16M events (452M context pairs —",
+        "- Round-7 operator cells (BENCH/ANALYSIS_r07.md §6, over",
+        "  synth.events with a 10% hot user): range_join 0.70 at 16M events (452M context pairs —",
         "  above the streaming ceiling via join arithmetic intensity, the",
         "  hot timeline spread across its time buckets);",
         "  decayed_past_mean plain 0.31 (hot user's window = one ~2 s",
@@ -317,7 +316,7 @@ def write_report(n, sf, repeat):
         "- The END-TO-END crawl-to-tensors chain (WARC -> extract -> scrub",
         "  -> dedup -> perplexity gate -> BPE encode -> vocab ids ->",
         "  contiguous pack -> epoch shuffle) has its own N->4N cell since",
-        "  round 7 (`tools/bench_corpus_chain.py`, BENCH/ANALYSIS_r07.md §3):",
+        "  round 7 (BENCH/ANALYSIS_r07.md §3):",
         "  320k pages / 56M tokens, 79.7 s at local[8] -> 55.2 s at",
         "  local[32] (697k -> 1.01M tokens/s), efficiency 0.361 vs the",
         "  box's ~0.49 streaming ceiling, with per-stage mins and the",
