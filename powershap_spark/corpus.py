@@ -22,8 +22,8 @@ TableIO seam documents — SURVEY §7.6):
 Why markers and not _SUCCESS: Spark writes _SUCCESS inside the data dir
 as part of the job, but a stage is only resumable once the DRIVER-side
 bookkeeping (row count, wall, lineage record) is also durable — the
-marker is written after, atomically (write-tmp + rename), exactly like
-``CheckpointStore.write_iteration``.
+marker is written after, atomically (write-tmp + rename), by the same
+``rundir.RunDir`` that ``CheckpointStore`` uses.
 
 Stage identity is POSITIONAL + NAMED: the marker and data paths embed
 ``(index, name)``, so resuming with a renamed, reordered, or inserted
@@ -41,6 +41,8 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .rundir import RunDir
 
 __all__ = ["CorpusPipeline", "Stage"]
 
@@ -70,45 +72,30 @@ class CorpusPipeline:
     def __init__(self, root: str, run_id: str, stages: list[Stage]):
         if not stages:
             raise ValueError("stages must be non-empty")
-        if "://" in root:
-            # the marker/lineage bookkeeping is DRIVER-side os I/O: a URI
-            # root would let Spark write the stage parquet remotely while
-            # the markers land (or crash) on a local path that happens to
-            # contain 's3:/...' — the worst failure mode being a 10-hour
-            # ingest whose marker never lands. Require a POSIX-visible
-            # root (NFS / Lustre / fuse-mounted object store); a
-            # Hadoop-FileSystem marker backend is the seam if a raw URI
-            # root is ever needed.
-            raise ValueError(
-                f"root must be a POSIX-visible path, got URI {root!r} — "
-                "mount the store (s3fs/NFS) or point root at shared disk"
-            )
         names = [s.name for s in stages]
         if len(set(names)) != len(names):
             raise ValueError(f"duplicate stage names: {names}")
-        self.dir = os.path.join(root, run_id)
-        os.makedirs(self.dir, exist_ok=True)
+        # markers + lineage live in one RunDir (rejects URI roots: the
+        # bookkeeping is driver-side os I/O)
+        self._run_dir = RunDir(root, run_id)
+        self.dir = self._run_dir.dir
         self.stages = list(stages)
 
     def _data_dir(self, idx: int) -> str:
         return os.path.join(self.dir, f"{idx:02d}_{self.stages[idx].name}", "data")
 
     def _marker(self, idx: int) -> str:
-        return os.path.join(self.dir, f"{idx:02d}_{self.stages[idx].name}.COMPLETE")
+        return f"{idx:02d}_{self.stages[idx].name}.COMPLETE"
 
     def completed(self) -> list[str]:
         """Names of the contiguous completed prefix (a gap ends resume —
         a later marker without its predecessors is unusable)."""
         out = []
         for i, s in enumerate(self.stages):
-            if not os.path.exists(self._marker(i)):
+            if not self._run_dir.marked(self._marker(i)):
                 break
             out.append(s.name)
         return out
-
-    def _log(self, rec: dict) -> None:
-        with open(os.path.join(self.dir, "metrics.jsonl"), "a") as f:
-            f.write(json.dumps(rec) + "\n")
 
     def run(self, spark: SparkSession) -> DataFrame:
         """Run the chain, resuming after the last completed stage. Returns
@@ -122,10 +109,7 @@ class CorpusPipeline:
         # treat the stale/partial parquet under it as completed — the
         # marker must only ever cover bytes this run wrote
         for i in range(done, len(self.stages)):
-            try:
-                os.remove(self._marker(i))
-            except FileNotFoundError:
-                pass
+            self._run_dir.unmark(self._marker(i))
         prev: DataFrame | None = (
             spark.read.parquet(self._data_dir(done - 1)) if done else None
         )
@@ -148,7 +132,7 @@ class CorpusPipeline:
             prev = spark.read.parquet(data)
             n = prev.count()
             wall = round(time.perf_counter() - t0, 3)
-            self._log(
+            self._run_dir.log_metrics(
                 {
                     "stage": st.name,
                     "idx": i,
@@ -159,10 +143,9 @@ class CorpusPipeline:
                     ),
                 }
             )
-            tmp = self._marker(i) + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(json.dumps({"rows": int(n), "wall_s": wall}))
-            os.replace(tmp, self._marker(i))
+            self._run_dir.mark(
+                self._marker(i), json.dumps({"rows": int(n), "wall_s": wall})
+            )
             if st.cleanup is not None:
                 st.cleanup()
         if prev is None:  # pragma: no cover — stages is non-empty
@@ -170,8 +153,4 @@ class CorpusPipeline:
         return prev
 
     def metrics(self) -> list[dict]:
-        path = os.path.join(self.dir, "metrics.jsonl")
-        if not os.path.exists(path):
-            return []
-        with open(path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return self._run_dir.metrics()

@@ -2,23 +2,24 @@
 
 Mirrors the reference control flow exactly (powershap/powershap.py:328-516:
 initial batch -> statistical analysis -> automatic top-up -> optional
-convergence recursion -> p-value mask), while executing every iteration as
-Spark work:
+convergence recursion -> p-value mask). Every explain batch runs through
+ONE driver, ``ExplainBackend.explain``; a backend only says where its
+per-block function runs. ``SparkExplainBackend`` shuffles the feature
+matrix ONCE on part_id and runs it per partition block inside
+``groupBy(part_id).applyInPandas`` (Arrow transfer, no per-row Python);
+``PandasExplainBackend`` calls it in-process on the whole frame as block 0.
+All batch iterations loop over the block locally, returning per-feature
+partials that are combined with a count-weighted mean (partial+final agg).
 
-- the feature matrix is a DataFrame, shuffled ONCE on part_id; each
-  partition block materializes as one pandas block inside
-  ``groupBy(part_id).applyInPandas`` (Arrow transfer, no per-row Python)
-  and all batch iterations loop over it locally, returning per-feature
-  partials — no per-iteration data replication or re-shuffle;
-- partials are combined with a count-weighted mean (partial+final agg);
-- every iteration is checkpointed (parquet + completion marker) with
-  per-partition lineage ``(run_id, iteration, seed_start, part_id, n_rows,
-  n_val_rows, wall_ms)`` so a killed run resumes mid-batch and produces
-  byte-identical statistics (FIXTURES.md F6);
-- seeds are pure functions of the iteration index (probe: RandomState(
-  local_i + seed_start), split: RandomState(local_i)) exactly like the
-  reference (shap_explainer.py:109-122), so resume = replay the driver
-  control flow and skip completed iterations.
+When a batch returns, each of its iterations is checkpointed (parquet +
+completion marker) with per-partition lineage ``(iteration, seed_start,
+part_id, n_rows, n_val_rows, wall_ms)``, plus one ``metrics.jsonl`` record
+for the batch, so a killed run re-runs only unfinished batches and gives
+byte-identical statistics (FIXTURES.md F6): seeds are pure functions of
+the iteration index (probe: RandomState(local_i + seed_start), split:
+RandomState(local_i)) exactly like the reference (shap_explainer.py:
+109-122), and the cv split stream is a pure function of its position, so
+resume = replay the driver control flow and skip completed iterations.
 
 Faithful quirks kept: split seed restarts at 0 for each automatic top-up
 batch while probe/model seeds continue (shap_explainer.py:109 vs :122);
@@ -28,14 +29,15 @@ kwargs (powershap.py:472) — unknown kwargs are ignored, not an error.
 
 from __future__ import annotations
 
-import json
 import os
 import time
+import warnings
 
 import numpy as np
 import pandas as pd
 
-from .kernel import RANDOM_COL, explain_iteration, explain_prepared, prepare_block
+from .kernel import RANDOM_COL, explain_prepared, prepare_block
+from .rundir import RunDir
 from .stats import shaps_long_to_wide, statistical_analysis
 
 _RESULT_SCHEMA = (
@@ -49,25 +51,19 @@ _RESULT_SCHEMA = (
 # ---------------------------------------------------------------------------
 
 
-class CheckpointStore:
+class CheckpointStore(RunDir):
     """Append-only per-iteration results + metrics with atomic completion
-    markers. Layout: {dir}/{run_id}/iter=PHASE.N.parquet + .COMPLETE;
-    a partially-written iteration (no marker) is discarded on resume.
+    markers, in one ``RunDir``. Layout: {dir}/{run_id}/iter=PHASE.N.parquet
+    + .COMPLETE; a partially-written iteration (no marker) is discarded on
+    resume.
 
     Iterations are namespaced by PHASE ("main", "conv0", "conv1", ...)
     because the reference restarts seed streams inside convergence rounds
     (powershap.py:446-456 calls explain with the default seed start), so
     global iteration indices alone would collide across phases."""
 
-    def __init__(self, root: str, run_id: str):
-        self.dir = os.path.join(root, run_id)
-        os.makedirs(self.dir, exist_ok=True)
-
     def _pq(self, phase: str, it: int) -> str:
-        return os.path.join(self.dir, f"iter={phase}.{it}.parquet")
-
-    def _marker(self, phase: str, it: int) -> str:
-        return os.path.join(self.dir, f"iter={phase}.{it}.COMPLETE")
+        return self.path(f"iter={phase}.{it}.parquet")
 
     def completed_iterations(self, phase: str) -> set[int]:
         out = set()
@@ -81,19 +77,14 @@ class CheckpointStore:
         tmp = self._pq(phase, it) + ".tmp"
         pdf.to_parquet(tmp)
         os.replace(tmp, self._pq(phase, it))
-        with open(self._marker(phase, it), "w") as f:
-            f.write("ok")
+        self.mark(f"iter={phase}.{it}.COMPLETE")
 
     def read_iteration(self, phase: str, it: int) -> pd.DataFrame:
         return pd.read_parquet(self._pq(phase, it))
 
-    def log_metrics(self, record: dict) -> None:
-        with open(os.path.join(self.dir, "metrics.jsonl"), "a") as f:
-            f.write(json.dumps(record) + "\n")
-
 
 # ---------------------------------------------------------------------------
-# Spark batch executor
+# Explain-batch driver and its two backends
 # ---------------------------------------------------------------------------
 
 
@@ -114,10 +105,11 @@ def _make_group_fn(
     fit_kwargs=None,
     matrix_dtype=np.float32,
 ):
-    """Per-partition UDF body: the feature matrix block for one part_id is
-    materialized ONCE (a single Arrow transfer per partition) and ALL batch
-    iterations run on it in a local loop — the data is never replicated or
-    re-shuffled per iteration. ``iteration_pairs`` = [(global_it, local_i)].
+    """Per-block function ``fn(key, pdf)`` (the applyInPandas UDF body on
+    Spark, a direct call on pandas): the feature matrix block for one
+    part_id is materialized ONCE (a single Arrow transfer per partition)
+    and ALL batch iterations run on it in a local loop — the data is never
+    replicated or re-shuffled per iteration. ``iteration_pairs`` = [(global_it, local_i)].
 
     ``cv`` (an ``InfiniteSplitter``) + ``cv_positions`` (global_it ->
     absolute stream position) reconstruct the reference's single global
@@ -161,8 +153,6 @@ def _make_group_fn(
             )
 
         if cv is not None:
-            import numpy as _np
-
             y_ = (
                 pdf[stratify_col].to_numpy()
                 if stratify_col
@@ -171,7 +161,7 @@ def _make_group_fn(
             grp = pdf[group_col].to_numpy() if group_col else None
             first = cv_positions[iteration_pairs[0][0]]
             try:
-                gen = cv.at_position(first, _np.zeros((len(pdf), 1)), y=y_, groups=grp)
+                gen = cv.at_position(first, np.zeros((len(pdf), 1)), y=y_, groups=grp)
             except ValueError as e:
                 raise _cv_error(e) from e
             cur = first
@@ -209,8 +199,161 @@ def _make_group_fn(
     return fn
 
 
-class SparkExplainBackend:
-    """Executes explain batches on a prepared Spark DataFrame."""
+class ExplainBackend:
+    """The explain-batch driver both backends share (reference
+    ShapExplainer.explain): checkpoint replay, the batch's cv stream
+    positions, one ``_make_group_fn`` block fn per batch, the driver-side
+    empty-result error and degenerate-block warning, per-iteration
+    checkpoints + one ``metrics.jsonl`` record per batch, and the long ->
+    wide result. A backend supplies only ``_run(fn, its)``: where the block
+    fn runs over the matrix's part_id blocks."""
+
+    def __init__(
+        self, feature_cols, label_col, *, val_size, stratify_col, group_col,
+        model, store, cv, fit_kwargs, cv_start_pos, matrix_dtype,
+        probe_mode="positional", sort_cols=None,
+    ):
+        self.matrix_dtype = np.dtype(matrix_dtype)
+        self.feature_cols = list(feature_cols)
+        self.label_col = label_col
+        self.val_size = val_size
+        self.stratify_col = stratify_col
+        self.group_col = group_col
+        self.model = model
+        self.probe_mode = probe_mode
+        self.sort_cols = sort_cols
+        self.row_key_col = None
+        self.n_parts = 1
+        self.store = store
+        self.phase = "main"
+        self.cv = cv
+        # absolute position in the selector-global cv stream (continues
+        # across fits like the reference's persistent closure state)
+        self.cv_pos = int(cv_start_pos)
+        self.fit_kwargs = dict(fit_kwargs or {})
+
+    def _run(self, fn, its: list[int]) -> pd.DataFrame:
+        """Apply ``fn(key, block)`` to every part_id block of the matrix and
+        return the concatenated long results; ``its`` are the batch's
+        iterations (for progress labels)."""
+        raise NotImplementedError
+
+    def release(self) -> None:
+        """Free what the backend holds (called by the selector when the fit
+        completes); nothing by default."""
+
+    def explain(
+        self,
+        loop_its: int,
+        seed_start: int,
+        exclude_cols: list[str] | None = None,
+        extra_fit_kwargs: dict | None = None,
+    ) -> pd.DataFrame:
+        """Run one explain batch (reference ShapExplainer.explain). Returns the
+        wide I x (m+1) shaps_df for THIS batch (float32), checkpoint-aware."""
+        feats = [c for c in self.feature_cols if c not in set(exclude_cols or [])]
+        global_its = list(range(seed_start, seed_start + loop_its))
+        done = self.store.completed_iterations(self.phase) if self.store else set()
+
+        # every iteration consumes exactly one split from the selector-global
+        # cv stream, cached or not — positions stay aligned under checkpoint
+        # resume because the driver control flow replays identically.
+        # cv_pos itself only advances AFTER the batch completes (below):
+        # consume-on-use, so a failed batch leaves the stream where it was
+        # and an in-process retry replays the same splits (the reference's
+        # sequential-generator semantics)
+        cv_positions = {g: self.cv_pos + i for i, g in enumerate(sorted(global_its))}
+        fit_kw = {**self.fit_kwargs, **(extra_fit_kwargs or {})}
+
+        long_parts: list[pd.DataFrame] = []
+        todo: list[int] = []
+        for g in global_its:
+            cached = self.store.read_iteration(self.phase, g) if g in done else None
+            # a checkpointed iteration from a convergence round may have a
+            # different feature set; only reuse when it matches
+            if cached is not None and set(cached["feature"]) == set(feats) | {RANDOM_COL}:
+                long_parts.append(cached)
+            else:
+                todo.append(g)
+
+        if todo:
+            # each partition block is materialized once and all todo
+            # iterations loop over it locally
+            fn = _make_group_fn(
+                feats,
+                self.label_col,
+                [(int(g), int(g - seed_start)) for g in todo],
+                seed_start,
+                self.val_size,
+                self.stratify_col,
+                self.group_col,
+                self.model,
+                self.probe_mode,
+                self.row_key_col,
+                self.sort_cols,
+                cv=self.cv,
+                cv_positions=cv_positions,
+                fit_kwargs=fit_kw,
+                matrix_dtype=self.matrix_dtype,
+            )
+            t0 = time.perf_counter()
+            res = self._run(fn, todo)
+            wall = time.perf_counter() - t0
+            if res.empty:
+                raise ValueError(
+                    "explain produced no results — the input DataFrame has no "
+                    "rows (e.g. every probe fell before its conversation start)"
+                )
+            # Surface degenerate (no-signal) fits DRIVER-side: a single-class
+            # block's zero-coefficient model yields all-zero partials for
+            # every feature, and the executor-side UserWarning raised inside
+            # applyInPandas never reaches the driver console (ADVICE r3).
+            blk_max = res.groupby(["iteration", "part_id"])["mean_abs_shap"].max()
+            degenerate = [
+                (int(i), int(p)) for (i, p) in blk_max[blk_max == 0.0].index
+            ]
+            if degenerate:
+                warnings.warn(
+                    f"{len(degenerate)} explain block(s) produced all-zero "
+                    f"SHAP partials (iteration, part_id)={degenerate[:10]} — "
+                    "likely single-class fits (e.g. an unstratified part "
+                    "holding one label); their statistically-neutral zeros "
+                    "still fold into the selection statistics",
+                    UserWarning,
+                )
+            for g, pdf_it in res.groupby("iteration"):
+                pdf_it = pdf_it.reset_index(drop=True)
+                pdf_it["seed_start"] = seed_start
+                if self.store:
+                    self.store.write_iteration(self.phase, int(g), pdf_it)
+                long_parts.append(pdf_it)
+            if self.store:
+                blocks = res.drop_duplicates(["iteration", "part_id"])
+                self.store.log_metrics(
+                    {
+                        "phase": self.phase,
+                        "batch_iterations": [int(x) for x in todo],
+                        "seed_start": seed_start,
+                        "n_parts": self.n_parts,
+                        "wall_s": wall,
+                        # n_rows repeats on every feature row of a block:
+                        # count each (iteration, part_id) block once
+                        "rows_per_iteration": int(
+                            blocks["n_rows"].sum() / max(1, blocks["iteration"].nunique())
+                        ),
+                        "degenerate_blocks": degenerate,
+                    }
+                )
+
+        long_df = pd.concat(long_parts, ignore_index=True)
+        long_df = long_df[long_df["iteration"].isin(global_its)]
+        wide = shaps_long_to_wide(long_df, feats + [RANDOM_COL])
+        self.cv_pos += len(global_its)  # batch completed: consume the splits
+        return wide
+
+
+class SparkExplainBackend(ExplainBackend):
+    """Runs each explain batch as one grouped map over a cached Spark matrix."""
 
     def __init__(
         self,
@@ -236,29 +379,18 @@ class SparkExplainBackend:
     ):
         from pyspark.sql import functions as F
 
-        self.matrix_dtype = np.dtype(matrix_dtype)
-        self.feature_cols = list(feature_cols)
-        self.label_col = label_col
-        self.val_size = val_size
-        self.stratify_col = stratify_col
-        self.group_col = group_col
-        self.model = model
-        self.probe_mode = probe_mode
-        self.sort_cols = sort_cols
-        self.store = store
-        self.phase = "main"
-        self.cv = cv
-        # absolute position in the selector-global cv stream (continues
-        # across fits like the reference's persistent closure state)
-        self.cv_pos = int(cv_start_pos)
-        self.fit_kwargs = dict(fit_kwargs or {})
+        super().__init__(
+            feature_cols, label_col, val_size=val_size, stratify_col=stratify_col,
+            group_col=group_col, model=model, probe_mode=probe_mode,
+            sort_cols=sort_cols, store=store, cv=cv, fit_kwargs=fit_kwargs,
+            cv_start_pos=cv_start_pos, matrix_dtype=matrix_dtype,
+        )
         self.show_progress = show_progress
 
         keep = set(feature_cols) | {label_col}
         keep |= {c for c in (stratify_col, group_col, part_by) if c}
         keep |= set(sort_cols or [])
         d = df.select(*[c for c in df.columns if c in keep])
-        self.row_key_col = None
         if probe_mode == "keyed":
             key_cols = sort_cols or feature_cols
             d = d.withColumn("__row_key", F.xxhash64(*[F.col(c) for c in key_cols]))
@@ -344,153 +476,45 @@ class SparkExplainBackend:
         except Exception:
             pass
 
-    def explain(
-        self,
-        loop_its: int,
-        seed_start: int,
-        exclude_cols: list[str] | None = None,
-        extra_fit_kwargs: dict | None = None,
-    ) -> pd.DataFrame:
-        """Run one explain batch (reference ShapExplainer.explain). Returns the
-        wide I x (m+1) shaps_df for THIS batch (float32), checkpoint-aware."""
-        feats = [c for c in self.feature_cols if c not in set(exclude_cols or [])]
-        global_its = list(range(seed_start, seed_start + loop_its))
-        done = self.store.completed_iterations(self.phase) if self.store else set()
-        todo = [g for g in global_its if g not in done]
-
-        # every iteration consumes exactly one split from the selector-global
-        # cv stream, cached or not — positions stay aligned under checkpoint
-        # resume because the driver control flow replays identically.
-        # cv_pos itself only advances AFTER the batch completes (below):
-        # consume-on-use, so a failed batch leaves the stream where it was
-        # and an in-process retry replays the same splits (the reference's
-        # sequential-generator semantics)
-        cv_positions = {g: self.cv_pos + i for i, g in enumerate(sorted(global_its))}
-        fit_kw = {**self.fit_kwargs, **(extra_fit_kwargs or {})}
-
-        long_parts: list[pd.DataFrame] = []
-        for g in global_its:
-            if g in done:
-                cached = self.store.read_iteration(self.phase, g)
-                # a checkpointed iteration from a convergence round may have a
-                # different feature set; only reuse when it matches
-                if set(cached["feature"]) == set(feats) | {RANDOM_COL}:
-                    long_parts.append(cached)
-                else:
-                    todo.append(g)
-
-        if todo:
-            # one shuffle of the matrix by part_id; each partition block is
-            # materialized once and all todo iterations loop over it locally
-            iteration_pairs = [(int(g), int(g - seed_start)) for g in sorted(todo)]
-            fn = _make_group_fn(
-                feats,
-                self.label_col,
-                iteration_pairs,
-                seed_start,
-                self.val_size,
-                self.stratify_col,
-                self.group_col,
-                self.model,
-                self.probe_mode,
-                self.row_key_col,
-                self.sort_cols,
-                cv=self.cv,
-                cv_positions=cv_positions,
-                fit_kwargs=fit_kw,
-                matrix_dtype=self.matrix_dtype,
+    def _run(self, fn, its: list[int]) -> pd.DataFrame:
+        if self.show_progress:
+            # reference shows tqdm over iterations (shap_explainer.py:108);
+            # distributed batches surface through the job group instead —
+            # visible in the Spark UI / status tracker per explain batch
+            self.spark.sparkContext.setJobGroup(
+                f"powershap/{self.phase}",
+                f"explain batch: iterations {its[0]}"
+                f"..{its[-1]} over {self.n_parts} partitions",
             )
-            t0 = time.perf_counter()
+        try:
+            # self.df is cached ALREADY partitioned by part_id and sorted
+            # on (part_id, sort_cols), so the grouped map plans no
+            # Exchange and no Sort (test_plans.py) — except for a
+            # one-shot fit, which shuffles inside its single batch (no
+            # persisted exchange to amortize)
+            src = self.df
+            if self.single_batch:
+                src = src.withColumn("part_id", self.part_expr)
+                if self.n_parts > 1:
+                    src = src.repartition(self.n_parts, "part_id")
+            return (
+                src.groupBy("part_id")
+                .applyInPandas(fn, schema=_RESULT_SCHEMA)
+                .toPandas()
+            )
+        finally:
             if self.show_progress:
-                # reference shows tqdm over iterations (shap_explainer.py:108);
-                # distributed batches surface through the job group instead —
-                # visible in the Spark UI / status tracker per explain batch
-                self.spark.sparkContext.setJobGroup(
-                    f"powershap/{self.phase}",
-                    f"explain batch: iterations {iteration_pairs[0][0]}"
-                    f"..{iteration_pairs[-1][0]} over {self.n_parts} partitions",
-                )
-            try:
-                # self.df is cached ALREADY partitioned by part_id and sorted
-                # on (part_id, sort_cols), so the grouped map plans no
-                # Exchange and no Sort (test_plans.py) — except for a
-                # one-shot fit, which shuffles inside its single batch (no
-                # persisted exchange to amortize)
-                src = self.df
-                if self.single_batch:
-                    src = src.withColumn("part_id", self.part_expr)
-                    if self.n_parts > 1:
-                        src = src.repartition(self.n_parts, "part_id")
-                res = (
-                    src.groupBy("part_id")
-                    .applyInPandas(fn, schema=_RESULT_SCHEMA)
-                    .toPandas()
-                )
-            finally:
-                if self.show_progress:
-                    # don't leave the group attached to the user's thread
-                    sc = self.spark.sparkContext
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setLocalProperty("spark.job.description", None)
-            wall = time.perf_counter() - t0
-            if res.empty:
-                raise ValueError(
-                    "explain produced no results — the input DataFrame has no "
-                    "rows (e.g. every probe fell before its conversation start)"
-                )
-            # Surface degenerate (no-signal) fits DRIVER-side: a single-class
-            # block's zero-coefficient model yields all-zero partials for
-            # every feature, and the executor-side UserWarning raised inside
-            # applyInPandas never reaches the driver console (ADVICE r3).
-            blk_max = res.groupby(["iteration", "part_id"])["mean_abs_shap"].max()
-            degenerate = [
-                (int(i), int(p)) for (i, p) in blk_max[blk_max == 0.0].index
-            ]
-            if degenerate:
-                import warnings
-
-                warnings.warn(
-                    f"{len(degenerate)} explain block(s) produced all-zero "
-                    f"SHAP partials (iteration, part_id)={degenerate[:10]} — "
-                    "likely single-class fits (e.g. an unstratified part "
-                    "holding one label); their statistically-neutral zeros "
-                    "still fold into the selection statistics",
-                    UserWarning,
-                )
-            for g, pdf_it in res.groupby("iteration"):
-                pdf_it = pdf_it.reset_index(drop=True)
-                pdf_it["seed_start"] = seed_start
-                if self.store:
-                    self.store.write_iteration(self.phase, int(g), pdf_it)
-                long_parts.append(pdf_it)
-            if self.store:
-                blocks = res.drop_duplicates(["iteration", "part_id"])
-                self.store.log_metrics(
-                    {
-                        "phase": self.phase,
-                        "batch_iterations": sorted(int(x) for x in todo),
-                        "seed_start": seed_start,
-                        "n_parts": self.n_parts,
-                        "wall_s": wall,
-                        # n_rows repeats on every feature row of a block:
-                        # count each (iteration, part_id) block once
-                        "rows_per_iteration": int(
-                            blocks["n_rows"].sum() / max(1, blocks["iteration"].nunique())
-                        ),
-                        "degenerate_blocks": degenerate,
-                    }
-                )
-
-        long_df = pd.concat(long_parts, ignore_index=True)
-        long_df = long_df[long_df["iteration"].isin(global_its)]
-        wide = shaps_long_to_wide(long_df, feats + [RANDOM_COL])
-        self.cv_pos += len(global_its)  # batch completed: consume the splits
-        return wide
+                # don't leave the group attached to the user's thread
+                sc = self.spark.sparkContext
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
 
 
-class PandasExplainBackend:
-    """Local single-process backend — the exact reference loop, used for
-    parity unit tests and tiny inputs (no Spark session required)."""
+class PandasExplainBackend(ExplainBackend):
+    """Local single-process backend: the shared batch driver over ONE
+    in-memory block (part_id 0, positional probes, no sort), used for
+    pandas / numpy fits, parity unit tests and tiny inputs (no Spark
+    session required)."""
 
     def __init__(
         self,
@@ -506,85 +530,22 @@ class PandasExplainBackend:
         cv_start_pos: int = 0,
         matrix_dtype="float32",
     ):
-        self.matrix_dtype = np.dtype(matrix_dtype)
         self.pdf = X.copy()
         self.pdf["__label"] = np.asarray(y)
         if stratify is not None:
             self.pdf["__strat"] = np.asarray(stratify)
         if groups is not None:
             self.pdf["__groups"] = np.asarray(groups)
-        self.feature_cols = list(X.columns)
-        self.val_size = val_size
-        self.has_strat = stratify is not None
-        self.has_groups = groups is not None
-        self.model = model
-        self.store = store
-        self.phase = "main"
-        self.cv = cv
-        self.cv_pos = int(cv_start_pos)
-        self._cv_gen = None
-        self.fit_kwargs = dict(fit_kwargs or {})
+        super().__init__(
+            list(X.columns), "__label", val_size=val_size,
+            stratify_col="__strat" if stratify is not None else None,
+            group_col="__groups" if groups is not None else None, model=model,
+            store=store, cv=cv, fit_kwargs=fit_kwargs, cv_start_pos=cv_start_pos,
+            matrix_dtype=matrix_dtype,
+        )
 
-    def _next_split(self):
-        """One split from the selector-global cv stream. The backend NEVER
-        generates from the selector's InfiniteSplitter directly (that would
-        leave a live — unpicklable — generator on shared state); it
-        reconstructs the stream at its starting position from a pristine
-        copy, exactly like the Spark backend's executor-side fast-forward."""
-        if self._cv_gen is None:
-            y_ = (
-                self.pdf["__strat"].to_numpy()
-                if self.has_strat
-                else self.pdf["__label"].to_numpy()
-            )
-            grp = self.pdf["__groups"].to_numpy() if self.has_groups else None
-            self._cv_gen = self.cv.at_position(
-                self.cv_pos, np.zeros((len(self.pdf), 1)), y=y_, groups=grp
-            )
-        self.cv_pos += 1
-        return next(self._cv_gen)
-
-    def explain(self, loop_its, seed_start, exclude_cols=None, extra_fit_kwargs=None) -> pd.DataFrame:
-        feats = [c for c in self.feature_cols if c not in set(exclude_cols or [])]
-        fit_kw = {**self.fit_kwargs, **(extra_fit_kwargs or {})}
-        rows = []
-        blk = None  # built lazily: an all-checkpointed batch never needs it
-        for i in range(loop_its):
-            g = seed_start + i
-            split = self._next_split() if self.cv is not None else None
-            if self.store and g in self.store.completed_iterations(self.phase):
-                cached = self.store.read_iteration(self.phase, g)
-                if set(cached["feature"]) == set(feats) | {RANDOM_COL}:
-                    rows.append(cached)
-                    continue
-            if blk is None:
-                blk = prepare_block(
-                    self.pdf,
-                    feats,
-                    "__label",
-                    stratify_col="__strat" if self.has_strat else None,
-                    group_col="__groups" if self.has_groups else None,
-                    matrix_dtype=self.matrix_dtype,
-                )
-            out = explain_prepared(
-                blk,
-                iteration=i,
-                seed_start=seed_start,
-                val_size=self.val_size,
-                model=self.model,
-                split_override=split,
-                fit_kwargs=fit_kw,
-            )
-            out.insert(0, "part_id", np.int32(0))
-            out.insert(0, "iteration", np.int32(g))
-            out["n_rows"] = np.int64(len(self.pdf))
-            out["wall_ms"] = 0.0
-            out["seed_start"] = seed_start
-            if self.store:
-                self.store.write_iteration(self.phase, g, out)
-            rows.append(out)
-        long_df = pd.concat(rows, ignore_index=True)
-        return shaps_long_to_wide(long_df, feats + [RANDOM_COL])
+    def _run(self, fn, its: list[int]) -> pd.DataFrame:
+        return fn((0,), self.pdf)
 
 
 # ---------------------------------------------------------------------------
@@ -678,11 +639,9 @@ class PowerShapSelector:
         group_col: str | None = None,
         **kwargs,
     ):
-        store = (
-            CheckpointStore(self.checkpoint_dir, self.run_id)
-            if self.checkpoint_dir
-            else None
-        )
+        store = None
+        if self.checkpoint_dir:
+            store = CheckpointStore(self.checkpoint_dir, self.run_id)
         # per-call kwargs take precedence over constructor fit_kwargs
         # (reference powershap.py:353)
         fit_kw = {**self.fit_kwargs, **kwargs}
@@ -757,9 +716,7 @@ class PowerShapSelector:
             self._cv_consumed = backend.cv_pos if self.cv is not None else 0
             # release the cached projected matrix — repeated fits in one
             # session must not accumulate cached DataFrames
-            release = getattr(backend, "release", None)
-            if release:
-                release()
+            backend.release()
 
         sub = processed[processed.index != RANDOM_COL]
         order = {c: i for i, c in enumerate(self.feature_names_in_)}
@@ -791,16 +748,12 @@ class PowerShapSelector:
         ):
             if max_iterations - max_iterations_old > self.limit_automatic:
                 add = self.limit_incremental_iterations
-                shaps_new = backend.explain(
-                    add, max_iterations_old, exclude_cols, extra_fit_kwargs
-                )
-                max_iterations_old = max_iterations_old + add
             else:
                 add = max_iterations - max_iterations_old
-                shaps_new = backend.explain(
-                    add, max_iterations_old, exclude_cols, extra_fit_kwargs
-                )
-                max_iterations_old = max_iterations
+            shaps_new = backend.explain(
+                add, max_iterations_old, exclude_cols, extra_fit_kwargs
+            )
+            max_iterations_old += add
 
             shaps_df = pd.concat([shaps_df, shaps_new], ignore_index=True)
             processed = statistical_analysis(

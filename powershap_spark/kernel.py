@@ -769,8 +769,8 @@ def explain_iteration(
     matrix_dtype=np.float32,
 ) -> pd.DataFrame:
     """One-shot convenience wrapper: ``prepare_block`` + ``explain_prepared``.
-    Batched callers (the applyInPandas group fn, the pandas backend loop)
-    prepare the block once and call ``explain_prepared`` per iteration —
+    Batched callers (the engine's block fn, on both backends) prepare the
+    block once and call ``explain_prepared`` per iteration —
     results are bit-identical either way (same matrix values, same probe,
     same split)."""
     blk = prepare_block(

@@ -291,7 +291,6 @@ FEATURE_COLS = [
 def point_in_time_matrix(
     features: DataFrame,
     probes: DataFrame,
-    tau_seconds: float = DEFAULT_TAU,
     skew_safe="auto",
     bucket_seconds: int = 86_400,
     hot_threshold_rows: int = 1_000_000,
@@ -353,7 +352,7 @@ def select_features(
 
     with tracking_scope():
         feats = turn_features(transcripts, tau_seconds, skew_safe=skew_safe)
-        mat = point_in_time_matrix(feats, probes, tau_seconds, skew_safe=skew_safe)
+        mat = point_in_time_matrix(feats, probes, skew_safe=skew_safe)
         mat = mat.filter(F.col("feature_ts").isNotNull())  # probes before conv start
         sel = selector or PowerShapSelector(
             sort_cols=["conv_id", "ts"], **selector_kw

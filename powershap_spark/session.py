@@ -63,3 +63,19 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def submit_session(master: str | None = None, local: int | None = None) -> SparkSession:
+    """The session a spark-submit entry point (``tools/submit_*.py``) runs
+    on: an explicit ``master`` URL wins over ``local`` (``local[N]`` with N
+    shuffle partitions); with neither, the session spark-submit
+    preconfigured. A ``local-cluster`` master's executors are separate
+    processes, so they get the working directory on their PYTHONPATH."""
+    if master is None and local:
+        master = f"local[{local}]"
+    if master is None:
+        return SparkSession.builder.getOrCreate()
+    extra = None
+    if master.startswith("local-cluster"):
+        extra = {"spark.executorEnv.PYTHONPATH": os.path.abspath(".")}
+    return get_spark(master=master, shuffle_partitions=local, extra_conf=extra)

@@ -142,3 +142,51 @@ def test_five_class_warns_like_reference():
     with pytest.warns(UserWarning, match=">= 5 integers"):
         sel = PowerShapSelector(power_iterations=5).fit(X, y)
     assert "a" in sel.selected_features_
+
+
+@pytest.mark.parametrize("n_splits", [None, 3])
+def test_pandas_checkpoint_resume_identical(clf_xy, tmp_path, n_splits):
+    """A pandas fit resumed from a 3-iteration checkpoint (with a markerless
+    garbage parquet where iteration 3 would go) equals an uncheckpointed
+    6-iteration fit, with and without cv, and logs its batches to
+    metrics.jsonl like the Spark path."""
+    import os
+
+    from powershap_spark import CheckpointStore, KFold
+
+    X, y = clf_xy
+
+    def sel(n, **kw):
+        return PowerShapSelector(
+            power_iterations=n, cv=KFold(n_splits) if n_splits else None, **kw
+        )
+
+    ref = sel(6).fit(X, y)
+    ck = str(tmp_path)
+    sel(3, checkpoint_dir=ck, run_id="r").fit(X, y)
+    with open(os.path.join(ck, "r", "iter=main.3.parquet"), "w") as f:
+        f.write("garbage")
+    res = sel(6, checkpoint_dir=ck, run_id="r").fit(X, y)
+    assert res._processed_shaps_df.equals(ref._processed_shaps_df)
+    assert res.selected_features_ == ref.selected_features_
+    assert res._cv_consumed == ref._cv_consumed
+
+    assert os.path.exists(os.path.join(ck, "r", "metrics.jsonl"))
+    metrics = CheckpointStore(ck, "r").metrics()
+    # the resumed fit re-ran only the iterations without a marker
+    assert [m["batch_iterations"] for m in metrics] == [[0, 1, 2], [3, 4, 5]]
+    assert all(m["rows_per_iteration"] == len(X) for m in metrics)
+
+
+def test_checkpoint_store_rejects_uri_root(clf_xy, tmp_path, monkeypatch):
+    """Checkpoint bookkeeping is driver-side os I/O: a URI root must raise
+    instead of silently creating a local ./s3:/... directory."""
+    from powershap_spark import CheckpointStore
+
+    X, y = clf_xy
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="POSIX-visible"):
+        CheckpointStore("s3://bucket/ckpt", "r")
+    with pytest.raises(ValueError, match="POSIX-visible"):
+        PowerShapSelector(power_iterations=2, checkpoint_dir="s3://bucket/ckpt").fit(X, y)
+    assert list(tmp_path.iterdir()) == []

@@ -303,6 +303,27 @@ def test_cv_selector_reusable_across_backends(spark, clf_xy):
     assert sel._cv_consumed == 9
 
 
+def test_cv_pandas_failed_batch_consumes_no_splits(clf_xy):
+    """Consume-on-use on the pandas path, as on the Spark path: a batch that
+    fails mid-way leaves the selector-global cv stream where it was, so a
+    retry replays the same splits."""
+    X, y = clf_xy
+
+    class FailsOnSecondFit:
+        calls = 0
+
+        def fit_get_shap(self, X_train, Y_train, X_val, Y_val, random_seed, **kw):
+            self.calls += 1
+            if self.calls == 2:
+                raise RuntimeError("second fit fails")
+            return np.zeros_like(X_val)
+
+    sel = PowerShapSelector(power_iterations=5, cv=KFold(3), model=FailsOnSecondFit())
+    with pytest.raises(RuntimeError, match="second fit fails"):
+        sel.fit(X, y)
+    assert sel._cv_consumed == 0
+
+
 def test_stratified_group_kfold_shuffle_decouples_counts_from_identity():
     """sklearn's StratifiedGroupKFold(shuffle=True) shuffles the per-group
     counts-matrix rows IN PLACE without tracking the permutation: the greedy

@@ -131,19 +131,9 @@ def main(argv=None):
     args = ap.parse_args(argv)
 
     from powershap_spark.corpus import CorpusPipeline
-    from powershap_spark.session import get_spark
+    from powershap_spark.session import submit_session
 
-    if args.master:
-        spark = get_spark(master=args.master)
-    elif args.local:
-        spark = get_spark(
-            master=f"local[{args.local}]", shuffle_partitions=args.local
-        )
-    else:
-        # cluster deployment: spark-submit supplies the master
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.builder.getOrCreate()
+    spark = submit_session(args.master, args.local)
 
     pipe = CorpusPipeline(args.work_dir, args.run_id, build_stages(args))
     already = pipe.completed()

@@ -3,8 +3,12 @@
     zip -r powershap_spark.zip powershap_spark
     spark-submit --py-files powershap_spark.zip tools/submit_job.py \
         --transcripts s3://bucket/transcripts --probes s3://bucket/probes \
-        --checkpoint-dir s3://bucket/ckpt --run-id run42 \
+        --checkpoint-dir /mnt/shared/ckpt --run-id run42 \
         --iterations 10 --n-parts 2048 --output s3://bucket/selected
+
+``--checkpoint-dir`` must be a POSIX-visible path shared across driver
+restarts (NFS / Lustre / a fuse-mounted bucket): the iteration markers and
+lineage are driver-side file I/O, and a URI root is rejected.
 
 Reads the transcript + probe tables (Iceberg identifier or parquet path via
 the TableIO seam), runs the full point-in-time powershap pipeline with
@@ -27,7 +31,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 
@@ -53,26 +56,10 @@ def main(argv=None):
     )
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from powershap_spark.pipeline import select_features
+    from powershap_spark.session import submit_session
 
-    if args.local:
-        from powershap_spark.session import get_spark
-
-        master = args.master or (f"local[{args.local}]" if args.local else None)
-        extra = (
-            {"spark.executorEnv.PYTHONPATH": os.path.abspath(".")}
-            if master and master.startswith("local-cluster")
-            else None
-        )
-        spark = get_spark(
-            master=master,
-            shuffle_partitions=args.local or None,
-            extra_conf=extra,
-        )
-    else:  # under spark-submit the session comes preconfigured
-        spark = SparkSession.builder.getOrCreate()
+    spark = submit_session(args.master, args.local)
 
     if args.synthetic_sf:
         from bench import build_transcripts
