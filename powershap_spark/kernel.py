@@ -23,8 +23,6 @@ semantics of ``shap.explainers.Linear`` (shap_explainer.py:336).
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
@@ -119,65 +117,6 @@ def train_test_split_indices(
 # ---------------------------------------------------------------------------
 
 
-_BUF_TLS = threading.local()
-
-# Per-role slot cap: CV workloads alternate a handful of fold shapes (k
-# distinct (n_train, n_val) pairs); a few LRU slots per role keep each
-# shape's buffer resident instead of reallocating on every alternation,
-# while still bounding what an idle worker pins.
-_POOL_SLOTS_PER_ROLE = 4
-
-
-def _pooled(role: str, shape, dtype) -> np.ndarray:
-    """Reusable per-thread work buffer for the hot fit loop.
-
-    Every iteration used to allocate fresh n x m temporaries (train/val
-    copies, the standardized design, the weighted-Hessian workspace);
-    beyond the allocator churn, each fresh large allocation is an mmap
-    whose pages the kernel zeroes on first touch — pure extra DRAM writes
-    every iteration, and the cycling addresses defeat cache residency of
-    a block that would otherwise fit in L2/L3 (~0.7 MB at 10k rows x 17
-    float32 features). Reusing one buffer per role keeps the whole
-    per-block working set cache-resident across the batch's iterations —
-    the lever that moves the N->4N efficiency RATIO, not just wall time
-    (the 4N side is the one pushing the DRAM ceiling). Buffers are always
-    fully overwritten before use (np.take/subtract/multiply with out=),
-    so results are bit-identical to fresh allocations.
-
-    The pool is THREAD-local (not merely process-global): Spark's Python
-    UDF workers run one task at a time, but PandasExplainBackend can run
-    in two driver threads at once (concurrent selector fits in a
-    notebook) — a shared pool there would silently corrupt fit matrices.
-    Each role keeps up to ``_POOL_SLOTS_PER_ROLE`` LRU (shape, dtype)
-    slots so alternating CV-fold shapes don't thrash a single slot;
-    ``clear_buffer_pool()`` releases everything the calling thread pins."""
-    pool = getattr(_BUF_TLS, "pool", None)
-    if pool is None:
-        pool = _BUF_TLS.pool = {}
-    slots = pool.get(role)
-    if slots is None:
-        slots = pool[role] = OrderedDict()
-    key = (tuple(shape), np.dtype(dtype))
-    buf = slots.get(key)
-    if buf is None:
-        buf = np.empty(*key)
-        slots[key] = buf
-        if len(slots) > _POOL_SLOTS_PER_ROLE:
-            slots.popitem(last=False)  # evict least-recently-used
-    else:
-        slots.move_to_end(key)
-    return buf
-
-
-def clear_buffer_pool() -> None:
-    """Release every work buffer the CALLING thread's pool pins. Call after
-    a large one-off fit on a long-lived driver/worker so idle threads don't
-    hold the largest-ever block's buffers; the next fit simply
-    reallocates."""
-    if getattr(_BUF_TLS, "pool", None):
-        _BUF_TLS.pool.clear()
-
-
 def _work_dtype(X: np.ndarray) -> np.dtype:
     """Fit math follows the matrix dtype: float32 blocks run the whole
     GEMM/standardize pipeline in float32 (half the DRAM traffic, 2x BLAS
@@ -205,8 +144,7 @@ class LinearRegressionModel:
         X = X.astype(wd, copy=False)
         y = np.asarray(y, dtype=wd)
         mu = X.mean(axis=0, dtype=wd)
-        Xc = _pooled("ols_Xc", X.shape, wd)
-        np.subtract(X, mu, out=Xc)
+        Xc = X - mu
         yc = y - y.mean(dtype=wd)
         A = (Xc.T @ Xc).astype(np.float64) + self.l2 * np.eye(X.shape[1])
         self.coef_ = np.linalg.solve(A, (Xc.T @ yc).astype(np.float64)).astype(wd)
@@ -288,14 +226,13 @@ class LogisticRegressionModel:
         y = y.astype(wd, copy=False)
         mu, sd = X.mean(axis=0, dtype=wd), X.std(axis=0, dtype=wd)
         sd = np.where(sd < 1e-12, 1.0, sd).astype(wd)
-        Z = _pooled("logit_Z", X.shape, wd)  # standardized design, reused
-        np.subtract(X, mu, out=Z)
-        np.divide(Z, sd, out=Z)
+        Z = X - mu
+        Z /= sd
         n, m = Z.shape
         tol = max(self.tol, 100.0 * float(np.finfo(wd).eps))
         w = np.zeros(m, dtype=wd)
         b = float(np.log((y.mean(dtype=np.float64) + 1e-9) / (1 - y.mean(dtype=np.float64) + 1e-9)))
-        ZW = _pooled("logit_ZW", Z.shape, wd)  # Hessian workspace, reused
+        ZW = np.empty_like(Z)  # weighted-Hessian workspace, one per fit
         for _ in range(self.max_iter):
             eta = np.clip(Z @ w + b, -35, 35)
             p = 1.0 / (1.0 + np.exp(-eta))
@@ -346,7 +283,6 @@ def linear_shap_values(
     coef: np.ndarray,
     X_train: np.ndarray,
     X_val: np.ndarray,
-    reuse_buffer: bool = False,
 ) -> np.ndarray:
     """Exact interventional linear SHAP: phi_ij = coef_j * (x_ij - mean_train_j).
 
@@ -361,17 +297,7 @@ def linear_shap_values(
     X_val = np.asarray(X_val).astype(wd, copy=False)
     if coef.ndim == 2:
         return (X_val - mu)[:, :, None] * coef.T[None, :, :]
-    if not reuse_buffer:
-        return (X_val - mu) * coef[None, :]
-    # hot path (the batched explain loop): the result ALIASES the pooled
-    # buffer and MUST be consumed before the next kernel/_pooled call —
-    # explain_prepared honors this by taking np.abs(out=) immediately.
-    # The elementwise product overwrites the centered values in place
-    # (same positions, identical values).
-    centered = _pooled("shap_centered", X_val.shape, wd)
-    np.subtract(X_val, mu, out=centered)
-    np.multiply(centered, coef[None, :].astype(wd, copy=False), out=centered)
-    return centered
+    return (X_val - mu) * coef.astype(wd, copy=False)
 
 
 # ---------------------------------------------------------------------------
@@ -444,7 +370,7 @@ class _VendoredLinearKernel:
             model = type(model)()  # fresh copy per iteration, like clone()
         X_train, X_val = impute_nonfinite(X_train, X_val)
         model.fit(X_train, Y_train, random_seed=random_seed)
-        return linear_shap_values(model.coef_, X_train, X_val, reuse_buffer=True)
+        return linear_shap_values(model.coef_, X_train, X_val)
 
 
 def _try_external_kernels():
@@ -710,13 +636,8 @@ def explain_prepared(
         train_idx, val_idx = train_test_split_indices(
             n, val_size, iteration, stratify=blk["stratify"], groups=blk["groups"]
         )
-    # pooled row gathers: same values as fancy indexing, but the buffers
-    # are reused across the batch's iterations (cache residency, no
-    # per-iteration mmap+page-zero churn — see _pooled)
-    X_train = _pooled("xp_train", (len(train_idx), Xp.shape[1]), Xp.dtype)
-    np.take(Xp, train_idx, axis=0, out=X_train)
-    X_val = _pooled("xp_val", (len(val_idx), Xp.shape[1]), Xp.dtype)
-    np.take(Xp, val_idx, axis=0, out=X_val)
+    X_train = np.take(Xp, train_idx, axis=0)
+    X_val = np.take(Xp, val_idx, axis=0)
     Y_train, Y_val = y[train_idx], y[val_idx]
 
     kernel = resolve_kernel(model)
@@ -729,10 +650,8 @@ def explain_prepared(
         model=model,
         **(fit_kwargs or {}),
     )
-    # shap_vals may ALIAS pool memory (linear_shap_values reuse_buffer=True)
-    # — it must be consumed before any other kernel/_pooled call. Taking
-    # abs in place does exactly that (and skips a temporary); non-writable
-    # returns from external kernels fall back to a copy.
+    # abs in place skips a temporary; non-writable returns from external
+    # kernels fall back to a copy
     shap_vals = np.asarray(shap_vals)
     if shap_vals.flags.writeable:
         np.abs(shap_vals, out=shap_vals)

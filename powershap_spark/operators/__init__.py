@@ -14,7 +14,6 @@ from .windows import (
     lag_feature,
     lead_col,
     rolling,
-    row_number_ordered,
     session_gap,
     sessionize,
     text_stats,
@@ -45,7 +44,6 @@ __all__ = [
     "lag_feature",
     "lead_col",
     "rolling",
-    "row_number_ordered",
     "session_gap",
     "sessionize",
     "text_stats",

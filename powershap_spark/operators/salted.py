@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["detect_hot_keys", "salted_cumsum", "salted_ffill", "sessionize_salted"]
+__all__ = ["detect_hot_keys", "salted_cumsum"]
 
 
 def detect_hot_keys(
@@ -101,127 +101,3 @@ def salted_cumsum(
         .withColumn(out_col, F.coalesce(within, F.lit(0)) + F.col("__prefix"))
         .drop("__chunk", "__v", "__prefix")
     )
-
-
-def salted_ffill(
-    df: DataFrame,
-    col: str,
-    out_col: str,
-    entity: str = "conv_id",
-    order: str = "turn_idx",
-    chunk_size: int = 100_000,
-    strict_past: bool = True,
-) -> DataFrame:
-    """Skew-safe forward fill (last non-null over past rows)."""
-    d = _with_chunk(df, order, chunk_size)
-    chunk_last = d.groupBy(entity, "__chunk").agg(
-        F.max_by(col, F.when(F.col(col).isNotNull(), F.col(order))).alias("__chunk_last")
-    )
-    wc = Window.partitionBy(entity).orderBy("__chunk")
-    carry = chunk_last.withColumn(
-        "__carry",
-        F.last("__chunk_last", ignorenulls=True).over(
-            wc.rowsBetween(Window.unboundedPreceding, -1)
-        ),
-    ).select(entity, "__chunk", "__carry")
-
-    upper = -1 if strict_past else 0
-    w2 = Window.partitionBy(entity, "__chunk").orderBy(order)
-    within = F.last(col, ignorenulls=True).over(
-        w2.rowsBetween(Window.unboundedPreceding, upper)
-    )
-    return (
-        d.join(carry, [entity, "__chunk"], "left")
-        .withColumn(out_col, F.coalesce(within, F.col("__carry")))
-        .drop("__chunk", "__carry")
-    )
-
-
-def sessionize_salted(
-    df: DataFrame,
-    entity: str = "conv_id",
-    order: str = "turn_idx",
-    ts: str = "ts",
-    tau_seconds: float = 1800.0,
-    out_col: str = "session_seq",
-    chunk_size: int = 100_000,
-) -> DataFrame:
-    """Skew-safe ts-threshold sessionization, identical to
-    ``windows.sessionize``: new session on first turn or gap > tau.
-
-    The chunk-boundary gap needs the PREVIOUS chunk's last ts — carried via
-    the tiny per-chunk table, same two-phase shape as ``salted_cumsum``."""
-    d = _with_chunk(df, order, chunk_size)
-
-    chunk_last_ts = d.groupBy(entity, "__chunk").agg(
-        F.max(F.col(ts).cast("timestamp_ltz").cast("double")).alias("__chunk_last_ts")
-    )
-    wc = Window.partitionBy(entity).orderBy("__chunk")
-    prev_ts = chunk_last_ts.withColumn(
-        "__prev_chunk_ts", F.lag("__chunk_last_ts").over(wc)
-    ).select(entity, "__chunk", "__prev_chunk_ts")
-
-    w2 = Window.partitionBy(entity, "__chunk").orderBy(order)
-    d = d.join(prev_ts, [entity, "__chunk"], "left")
-    ep = F.col(ts).cast("timestamp_ltz").cast("double")
-    gap = ep - F.coalesce(F.lag(ep).over(w2), F.col("__prev_chunk_ts"))
-    is_new = ((gap > F.lit(float(tau_seconds))) | gap.isNull()).cast("int")
-    d = d.withColumn("__is_new", is_new).drop("__prev_chunk_ts")
-
-    out = salted_cumsum(
-        d, "__is_new", out_col, entity=entity, order=order, chunk_size=chunk_size, upper=0
-    )
-    return out.withColumn(out_col, (F.col(out_col) - 1).cast("long")).drop("__is_new")
-
-
-def chunked_window_apply(
-    df: DataFrame,
-    entity: str,
-    order: str,
-    build: "callable",
-    halo_rows: int,
-    chunk_size: int = 100_000,
-):
-    """Generic skew-safe evaluator for BOUNDED-frame window features.
-
-    Any window expression whose frame only reaches back ``halo_rows`` rows
-    (lag k, rolling [-k, -1], row-bounded range frames) can be computed per
-    (entity, chunk) instead of per entity, provided each chunk also sees the
-    previous ``halo_rows`` rows. Mechanism:
-
-      1. chunk = floor(order / chunk_size)
-      2. halo rows = the last ``halo_rows`` rows of each chunk, duplicated
-         into the NEXT chunk with ``__halo = 1``
-      3. ``build(df, window)`` computes its features over
-         Window.partitionBy(entity, chunk).orderBy(order) — bounded task
-         size regardless of how hot the entity is
-      4. halo duplicates are dropped
-
-    ``build`` receives (df, window_spec) and must return df with feature
-    columns added. Results are bit-identical to the plain per-entity window
-    for frames with lower bound >= -halo_rows (tests assert this).
-    """
-    if halo_rows >= chunk_size:
-        raise ValueError(
-            f"halo_rows ({halo_rows}) must be < chunk_size ({chunk_size}): the "
-            "halo is drawn from the immediately previous chunk only"
-        )
-    # explode-based halo duplication: one scan of the input (filter+union
-    # would recompute the whole upstream twice)
-    own = F.floor(F.col(order).cast("long") / F.lit(int(chunk_size)))
-    boundary = chunk_size - halo_rows
-    in_tail = F.pmod(F.col(order).cast("long"), F.lit(int(chunk_size))) >= boundary
-    u = (
-        df.withColumn("__own", own)
-        .withColumn(
-            "__chunk",
-            F.explode(
-                F.when(in_tail, F.array(own, own + 1)).otherwise(F.array(own))
-            ),
-        )
-        .withColumn("__halo", (F.col("__chunk") != F.col("__own")).cast("int"))
-        .drop("__own")
-    )
-    w = Window.partitionBy(entity, "__chunk").orderBy(order)
-    built = build(u, w)
-    return built.filter(F.col("__halo") == 0).drop("__halo", "__chunk")

@@ -32,7 +32,6 @@ __all__ = [
     "embedding_cosine_dedup",
     "quantize_embedding",
     "quantize_embeddings",
-    "quantized_cosine_col",
     "quantized_topk",
 ]
 
@@ -723,32 +722,6 @@ def quantize_embeddings(
     )
 
 
-def quantized_cosine_col(qa, qb) -> "F.Column":
-    """Cosine similarity from two quantized structs: the integer dot and
-    integer norms are exact (sums of int8 products fit int64 for any
-    realistic dimension), scales factor out of the ratio entirely — so the
-    result is the cosine of the QUANTIZED vectors, deterministic and
-    engine-agnostic."""
-    qa = F.col(qa) if isinstance(qa, str) else qa
-    qb = F.col(qb) if isinstance(qb, str) else qb
-    a, b = qa["q"], qb["q"]
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("long") * y.cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    na = F.aggregate(
-        a, F.lit(0).cast("long"), lambda acc, v: acc + v.cast("long") * v.cast("long")
-    )
-    nb = F.aggregate(
-        b, F.lit(0).cast("long"), lambda acc, v: acc + v.cast("long") * v.cast("long")
-    )
-    return F.when(
-        (na > 0) & (nb > 0),
-        dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
-    ).otherwise(F.lit(0.0))
-
-
 def quantized_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -765,7 +738,6 @@ def quantized_topk(
     # per-side integer norms are projected BEFORE the cross join (r8, same
     # reasoning as brute_force_topk): each norm depends on one quantized
     # vector alone, so the per-pair work is just the integer dot product.
-    # Same expressions as quantized_cosine_col, evaluated once per side.
     qnorm = lambda arr: F.aggregate(
         arr, F.lit(0).cast("long"), lambda acc, v: acc + v.cast("long") * v.cast("long")
     )

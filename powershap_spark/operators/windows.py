@@ -14,7 +14,8 @@ column. The guard is structural, not advisory: feature frames MUST end at
 Everything here is built-in window/expression API — JVM-side, whole-stage
 codegen, no Python in the hot path. Skewed entities (one conversation with
 10% of all rows serializes its window partition) are handled by the
-two-phase salted running aggregates in ``salted.py``.
+halo-chunked build in ``pipeline._turn_features_salted`` and the two-phase
+salted running sum in ``salted.py``.
 """
 
 from __future__ import annotations
@@ -38,7 +39,6 @@ __all__ = [
     "sessionize",
     "ffill",
     "bfill",
-    "row_number_ordered",
     "transition_counts",
     "text_stats",
     "text_stats_ints",
@@ -199,13 +199,6 @@ def bfill(col: str, name: str | None = None) -> FeatureSpec:
         ),
         leaky=True,
     )
-
-
-# --- W7: stable ordering / ranking ------------------------------------------
-
-
-def row_number_ordered(name: str = "turn_seq") -> FeatureSpec:
-    return FeatureSpec(name, lambda w: F.row_number().over(w) - F.lit(1))
 
 
 def transition_counts(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from .operators.asof import asof_join
 from .operators.windows import (
+    FeatureSpec,
     build_features,
     lag_feature,
     rolling,
@@ -58,8 +59,8 @@ def turn_features(
     skew_safe=True computes every windowed feature without a per-
     conversation window partition (a hot conversation would serialize it):
     bounded frames run inside halo-chunked (conv_id, chunk) windows,
-    unbounded running aggregates / sessionization / forward-fill use the
-    two-phase chunked prefix operators. Results are identical to the plain
+    unbounded running aggregates / sessionization / the past-tool flag use
+    two-phase chunk prefixes. Results are identical to the plain
     path (tests assert it); ``halo_rows`` must cover the deepest rows-frame
     AND the time frame (600s / min-gap 5s -> 120 rows here).
 
@@ -88,24 +89,25 @@ def turn_features(
         "n_nonspace",
         "n_punct",
     )
+    specs = [
+        lag_feature("text_len", 1),
+        lag_feature("text_len", 2),
+        lag_feature("n_tokens", 1),
+        rolling("text_len", "avg", -5, -1, name="text_len_avg_prev5"),
+        rolling("text_len", "sum", -3, -1, name="text_len_sum_prev3"),
+        rolling("n_tokens", "avg", None, -1, name="n_tokens_avg_past"),
+        rolling("text_len", "count", None, -1, name="n_prev_turns"),
+        time_rolling("text_len", "count", 600, name="turns_last_600s"),
+        session_gap("ts"),
+        sessionize("ts", tau_seconds),
+        # strictly-past "any earlier turn used a tool" — the 1-byte
+        # running max replaces forward-filling the tool string
+        rolling("has_tool", "max", None, -1, name="had_tool_past"),
+    ]
     if skew_safe:
-        out = _turn_features_salted(t, tau_seconds, chunk_size, halo_rows)
+        bounded = [s for s in specs if s.name not in _UNBOUNDED_FEATURES]
+        out = _turn_features_salted(t, bounded, tau_seconds, chunk_size, halo_rows)
     else:
-        specs = [
-            lag_feature("text_len", 1),
-            lag_feature("text_len", 2),
-            lag_feature("n_tokens", 1),
-            rolling("text_len", "avg", -5, -1, name="text_len_avg_prev5"),
-            rolling("text_len", "sum", -3, -1, name="text_len_sum_prev3"),
-            rolling("n_tokens", "avg", None, -1, name="n_tokens_avg_past"),
-            rolling("text_len", "count", None, -1, name="n_prev_turns"),
-            time_rolling("text_len", "count", 600, name="turns_last_600s"),
-            session_gap("ts"),
-            sessionize("ts", tau_seconds),
-            # strictly-past "any earlier turn used a tool" — the 1-byte
-            # running max replaces forward-filling the tool string
-            rolling("has_tool", "max", None, -1, name="had_tool_past"),
-        ]
         # ts_monotone: transcript timestamps are cumulative non-negative
         # gaps, i.e. non-decreasing in turn_idx — so the whole feature
         # block (rows frames + the 600s range frame) plans ONE sort
@@ -137,14 +139,28 @@ def turn_features(
     )
 
 
+# features whose frame reaches back to the conversation's first turn: the
+# salted path computes them in two-phase (within-chunk + carried prefix) form
+_UNBOUNDED_FEATURES = (
+    "n_tokens_avg_past",
+    "n_prev_turns",
+    "session_seq",
+    "had_tool_past",
+)
+
+
 def _turn_features_salted(
-    t: DataFrame, tau_seconds: float, chunk_size: int, halo_rows: int
+    t: DataFrame,
+    bounded: list[FeatureSpec],
+    tau_seconds: float,
+    chunk_size: int,
+    halo_rows: int,
 ) -> DataFrame:
     """Fused skew-safe feature build — the 10^12-turn formulation.
 
     ONE halo-chunked window pass over (conv_id, chunk) computes every
-    bounded feature AND every within-chunk running partial (halo rows are
-    flag-gated out of the unbounded frames); a TINY per-(conv, chunk)
+    ``bounded`` feature spec AND every within-chunk running partial (halo
+    rows are flag-gated out of the unbounded frames); a TINY per-(conv, chunk)
     prefix table (one row per chunk: counts / sums / session starts / last
     tool of all earlier chunks) is broadcast-joined back. Total big-table
     shuffles: the same single (conv_id, chunk) exchange the plain path
@@ -195,14 +211,8 @@ def _turn_features_salted(
     upto = w.rowsBetween(Window.unboundedPreceding, 0)
 
     a = u.withColumns(
-        {
-            "text_len_lag1": F.lag("text_len", 1).over(w),
-            "text_len_lag2": F.lag("text_len", 2).over(w),
-            "n_tokens_lag1": F.lag("n_tokens", 1).over(w),
-            "text_len_avg_prev5": F.avg("text_len").over(w.rowsBetween(-5, -1)),
-            "text_len_sum_prev3": F.sum("text_len").over(w.rowsBetween(-3, -1)),
-            "turns_last_600s": F.count("text_len").over(wt.rangeBetween(-600, -1)),
-            "session_gap_s": gap,
+        {s.name: s.expr(wt if s.needs_time_window else w) for s in bounded}
+        | {
             "__is_new": is_new,
             "__w_cnt": F.count(F.when(real, F.lit(1))).over(past),
             "__w_ntok": F.coalesce(

@@ -144,25 +144,3 @@ def selection_statistics_spark(iterations_df):
             / (2.0 * F.count("*"))
         ).alias("p_value"),
     )
-
-
-def aggregate_iterations_spark(iterations_df) -> "pd.DataFrame":
-    """Spark-side partial+final aggregation of per-partition results to the
-    per-(iteration, feature) count-weighted mean; returns a small pandas
-    frame (I*(m+1) rows) ready for ``shaps_long_to_wide``'s pivot — the
-    distributed reduction path for re-analyzing a persisted checkpoint
-    store's long table (``selection_statistics_spark`` goes further and
-    also computes the per-feature statistics without collecting)."""
-    from pyspark.sql import functions as F
-
-    agg = (
-        iterations_df.groupBy("iteration", "feature")
-        .agg(
-            (
-                F.sum(F.col("mean_abs_shap").cast("double") * F.col("n_val_rows"))
-                / F.sum("n_val_rows")
-            ).alias("mean_abs_shap"),
-            F.sum("n_val_rows").alias("n_val_rows"),
-        )
-    )
-    return agg.toPandas()

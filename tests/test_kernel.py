@@ -266,50 +266,39 @@ def test_gb_stumps_select_nonmonotone_feature_linear_misses():
     assert l_imp["sym"] < 5 * max(l_imp["noise_a"], l_imp["noise_b"])
 
 
-def test_buffer_pool_thread_local_and_shape_slots():
-    """The work-buffer pool is thread-local (concurrent driver-thread fits
-    must never share buffers), keeps one slot per (shape, dtype) up to a
-    small LRU cap (alternating CV-fold shapes reuse instead of thrash),
-    and clear_buffer_pool() releases the calling thread's pins."""
+def test_concurrent_pandas_fits_match_sequential():
+    """Two selectors fitting pandas frames in two driver threads at once
+    (concurrent fits in a notebook) produce exactly the sequential
+    results: the kernel holds no state shared between fits."""
     import threading
 
-    from powershap_spark.kernel import (
-        _POOL_SLOTS_PER_ROLE,
-        _BUF_TLS,
-        _pooled,
-        clear_buffer_pool,
-    )
+    from powershap_spark.engine import PowerShapSelector
 
-    clear_buffer_pool()
-    a = _pooled("t_role", (8, 3), np.float32)
-    # same shape+dtype -> same buffer object (the reuse claim)
-    assert _pooled("t_role", (8, 3), np.float32) is a
-    # a second shape occupies its own slot and does NOT evict the first
-    b = _pooled("t_role", (6, 3), np.float32)
-    assert b is not a
-    assert _pooled("t_role", (8, 3), np.float32) is a  # still resident
-    # alternating CV-fold shapes: both stay resident (no thrash)
-    assert _pooled("t_role", (6, 3), np.float32) is b
-    # dtype is part of the slot key
-    assert _pooled("t_role", (8, 3), np.float64) is not a
+    r = np.random.RandomState(11)
+    Xa = pd.DataFrame(r.randn(2000, 5), columns=[f"a{i}" for i in range(5)])
+    ya = pd.Series(2.0 * Xa["a0"] - Xa["a3"] + 0.5 * r.randn(2000))
+    # same shape as Xa: any work buffer shared across threads would collide
+    Xb = pd.DataFrame(r.randn(2000, 5), columns=[f"b{i}" for i in range(5)])
+    yb = pd.Series((Xb["b1"] + 0.3 * r.randn(2000) > 0).astype(np.int64))
+    jobs = [(Xa, ya), (Xb, yb)]
 
-    # LRU cap: flood with fresh shapes, the least-recently-used falls out
-    for i in range(_POOL_SLOTS_PER_ROLE + 1):
-        _pooled("t_role", (20 + i, 2), np.float32)
-    pool = _BUF_TLS.pool["t_role"]
-    assert len(pool) == _POOL_SLOTS_PER_ROLE
+    def fit(X, y):
+        return PowerShapSelector(power_iterations=8).fit(X, y)._processed_shaps_df
 
-    # thread isolation: another thread gets a DIFFERENT buffer object
-    other = {}
+    sequential = [fit(X, y) for X, y in jobs]
+    for _ in range(3):  # a few rounds: overlap between the threads varies
+        concurrent = [None, None]
+        start = threading.Barrier(2, timeout=60)
 
-    def grab():
-        other["buf"] = _pooled("t_role", (8, 3), np.float32)
-        other["buf"][:] = 7.0
+        def run(i):
+            start.wait()
+            concurrent[i] = fit(*jobs[i])
 
-    th = threading.Thread(target=grab)
-    th.start()
-    th.join()
-    assert other["buf"] is not _pooled("t_role", (8, 3), np.float32)
-
-    clear_buffer_pool()
-    assert _BUF_TLS.pool == {}
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+            assert not th.is_alive()
+        for seq, conc in zip(sequential, concurrent):
+            assert conc is not None and conc.equals(seq)

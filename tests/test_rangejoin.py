@@ -45,8 +45,10 @@ def _naive(lp, rp, before, after, how="inner"):
         return inner
     matched = set(inner["l_id"])
     un = lp[~lp["l_id"].isin(matched)].copy()
-    for c in ("ts_r", "r_id", "r_val"):
-        un[c] = None
+    # typed nulls, so concat keeps the dtypes and NaN/NaT compare exactly
+    un["ts_r"] = pd.NaT
+    un["r_id"] = np.nan
+    un["r_val"] = np.nan
     return pd.concat([inner, un], ignore_index=True)
 
 

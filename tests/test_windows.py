@@ -5,12 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from powershap_spark.operators.salted import (
-    detect_hot_keys,
-    salted_cumsum,
-    salted_ffill,
-    sessionize_salted,
-)
+from powershap_spark.operators.salted import detect_hot_keys, salted_cumsum
 from powershap_spark.operators.windows import (
     LeakageError,
     bfill,
@@ -210,34 +205,6 @@ def test_salted_cumsum_strict_past(spark):
     assert np.allclose(out.cs, exp, atol=1e-9)
 
 
-def test_salted_ffill_equals_plain(spark):
-    pdf = _skewed()
-    sdf = spark.createDataFrame(pdf)
-    out = (
-        salted_ffill(sdf, "v", "vf", entity="k", order="idx", chunk_size=53)
-        .toPandas()
-        .sort_values(["k", "idx"])
-        .reset_index(drop=True)
-    )
-    exp = pdf.groupby("k")["v"].apply(lambda s: s.ffill().shift(1)).reset_index(drop=True)
-    assert np.allclose(out.vf.fillna(-9), exp.fillna(-9))
-
-
-def test_sessionize_salted_equals_plain(spark):
-    pdf = _skewed()
-    tau = 40.0
-    sdf = spark.createDataFrame(pdf)
-    out = (
-        sessionize_salted(sdf, entity="k", order="idx", ts="ts", tau_seconds=tau, chunk_size=61)
-        .toPandas()
-        .sort_values(["k", "idx"])
-        .reset_index(drop=True)
-    )
-    gaps = pdf.groupby("k")["ts"].diff()
-    exp = ((gaps > tau) | gaps.isna()).groupby(pdf["k"]).cumsum() - 1
-    assert np.allclose(out.session_seq, exp)
-
-
 def test_text_stats(spark):
     pdf = pd.DataFrame({"text": ["Hello, World! How are you?", "", "ONE two", "  a  b  "]})
     out = spark.createDataFrame(pdf).withColumns(text_stats("text")).toPandas()
@@ -245,61 +212,6 @@ def test_text_stats(spark):
     assert list(out.n_tokens) == [5, 0, 2, 2]
     assert list(out.n_punct) == [3, 0, 0, 0]
     assert out.upper_ratio[2] == pytest.approx(3 / 7)
-
-
-def test_chunked_window_apply_equals_plain(spark):
-    """Halo-chunked bounded windows == per-entity windows, on data crafted
-    so the 600s time frame really spans many rows (constant 5s gaps)."""
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from powershap_spark.operators.salted import chunked_window_apply
-
-    n = 2000
-    pdf = pd.DataFrame(
-        {
-            "conv_id": ["hot"] * n,
-            "turn_idx": np.arange(n, dtype=np.int64),
-            "ep": 1000.0 + 5.0 * np.arange(n),  # 600s frame = 120 rows
-            "v": np.arange(n, dtype=np.float64) % 17,
-        }
-    )
-    sdf = spark.createDataFrame(pdf)
-
-    def build(df, w):
-        wt = Window.partitionBy("conv_id", "__chunk").orderBy(F.col("ep").cast("long"))
-        return df.withColumns(
-            {
-                "lag2": F.lag("v", 2).over(w),
-                "avg5": F.avg("v").over(w.rowsBetween(-5, -1)),
-                "c600": F.count("v").over(wt.rangeBetween(-600, -1)),
-            }
-        )
-
-    got = (
-        chunked_window_apply(sdf, "conv_id", "turn_idx", build, halo_rows=125, chunk_size=300)
-        .toPandas()
-        .sort_values("turn_idx")
-        .reset_index(drop=True)
-    )
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    wt = Window.partitionBy("conv_id").orderBy(F.col("ep").cast("long"))
-    exp = (
-        sdf.withColumns(
-            {
-                "lag2": F.lag("v", 2).over(w),
-                "avg5": F.avg("v").over(w.rowsBetween(-5, -1)),
-                "c600": F.count("v").over(wt.rangeBetween(-600, -1)),
-            }
-        )
-        .toPandas()
-        .sort_values("turn_idx")
-        .reset_index(drop=True)
-    )
-    for c in ["lag2", "avg5", "c600"]:
-        assert np.allclose(got[c].fillna(-9), exp[c].fillna(-9)), c
-    with pytest.raises(ValueError):
-        chunked_window_apply(sdf, "conv_id", "turn_idx", build, halo_rows=300, chunk_size=300)
 
 
 def test_turn_features_skew_safe_parity(spark):
@@ -328,3 +240,6 @@ def test_turn_features_skew_safe_parity(spark):
             ), c
         else:
             assert (a.astype(str) == b.astype(str)).all(), c
+    # the halo is drawn from the immediately previous chunk only
+    with pytest.raises(ValueError):
+        turn_features(t, skew_safe=True, chunk_size=130, halo_rows=130)
