@@ -24,11 +24,9 @@ __all__ = [
     "normalize_text",
     "exact_dedup",
     "shingles",
-    "minhash_signature",
     "hashed_shingles",
     "lsh_candidate_pairs",
     "minhash_dedup",
-    "simhash",
     "simhash_frame",
     "ngram_jaccard_pairs",
     "connected_components",
@@ -195,53 +193,6 @@ def hashed_shingles(col, n: int = 3, seed: int = 7) -> "F.Column":
     return F.array_distinct(bound)
 
 
-def minhash_signature(
-    shingle_col, num_hashes: int = 32, seed: int = 7, hash_family: str = "xxhash"
-) -> "F.Column":
-    """MinHash signature: for each of ``num_hashes`` hash functions, the
-    minimum hash over the shingle set. Returns array<bigint>.
-
-    Single pass over the shingle array: one aggregate folding an
-    array-of-mins accumulator (the naive per-hash array_min(transform(...))
-    re-evaluates the shingle expression num_hashes times — measured ~20x
-    slower at bench scale).
-
-    hash_family:
-      - "xxhash" (default, the scale path): k seeded JVM xxhash64 calls;
-      - "poly": affine maps of one polynomial char hash per shingle —
-        engine-agnostic, so the DuckDB oracle recomputes exact values.
-    """
-    c = F.col(shingle_col) if isinstance(shingle_col, str) else shingle_col
-    if hash_family == "xxhash":
-        init = F.array(*[F.lit(2**63 - 1).cast("long") for _ in range(num_hashes)])
-        seeds = F.array(*[F.lit(seed + i) for i in range(num_hashes)])
-        return F.aggregate(
-            c,
-            init,
-            lambda acc, s: F.zip_with(
-                acc, seeds, lambda m, sd: F.least(m, F.xxhash64(s, sd))
-            ),
-        )
-    if hash_family != "poly":
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-    a_l, b_l = affine_params(num_hashes, seed)
-    ab = F.array(
-        *[
-            F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
-            for a, b in zip(a_l, b_l)
-        ]
-    )
-    phashes = F.transform(c, _poly_char_hash)
-    init = F.array(*[F.lit(POLY_MOD).cast("long") for _ in range(num_hashes)])
-    return F.aggregate(
-        phashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, ab, lambda m, p: F.least(m, F.pmod(p["a"] * h + p["b"], F.lit(POLY_MOD)))
-        ),
-    )
-
-
 def _signature_frame(
     df: DataFrame,
     text_col: str,
@@ -251,20 +202,22 @@ def _signature_frame(
     hash_family: str,
     seed: int = 7,
 ) -> DataFrame:
-    """``(id, minhash)`` signature frame via explode + hash-aggregate.
+    """``(id, minhash)`` signature frame via explode + hash-aggregate: the
+    only MinHash signature implementation in the library.
 
-    Value-identical to ``select(id, minhash_signature(shingles, ...))`` —
-    the per-seed minimum over the same shingle multiset — but the fold runs
-    as a codegen'd HashAggregate over exploded shingle rows instead of an
-    interpreted HOF ``aggregate`` allocating a ``num_hashes``-wide array
-    per shingle (measured 2.2x faster at sf1.0; partial map-side
+    Per signature position, the minimum seeded hash over the doc's shingle
+    set, computed as a codegen'd HashAggregate over exploded shingle rows
+    (measured 2.2x faster at sf1.0 than an interpreted per-row HOF fold
+    allocating a ``num_hashes``-wide array per shingle; partial map-side
     aggregation collapses the exploded rows to one row per doc before any
-    exchange, so the shuffle carries only (id, num_hashes longs)).
+    exchange, so the shuffle carries only (id, num_hashes longs)). The
+    per-row fold is the test reference (``tests/_hash_reference.py``),
+    pinned value-identical for both families.
 
-    Edge parity with the HOF init accumulator: a group whose every hash is
-    null (only possible for a null-text doc under the poly family) emits
-    the init value via coalesce, exactly as ``least``/``zip_with`` ignored
-    the nulls."""
+    Edge semantics: a group whose every hash is null (only possible for a
+    null-text doc under the poly family) emits the init value (POLY_MOD)
+    via coalesce — what the fold's init accumulator yields when
+    ``least`` skips the nulls."""
     if hash_family == "xxhash":
         # NOTE: the shingle-hash seed is ALWAYS the hashed_shingles
         # default (7), matching the r7 expression path exactly — only the
@@ -335,18 +288,9 @@ def lsh_candidate_pairs(
         )
     rows_per_band = max(1, num_hashes // bands)
     banded = _banded(df, id_col, sig_col, bands, rows_per_band, hash_family)
-    a, b = banded.alias("a"), banded.alias("b")
-    pair_ids = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    return _pairs_with_est(
+        _band_pairs(banded, banded, "band_hash"), df, id_col, sig_col
     )
-    return _pairs_with_est(pair_ids, df, id_col, sig_col)
 
 
 def _banded(df, id_col, sig_col, bands, rows_per_band, hash_family):
@@ -374,6 +318,26 @@ def _banded(df, id_col, sig_col, bands, rows_per_band, hash_family):
     ).select("__id", "band.band_id", "band.band_hash")
 
 
+def _band_pairs(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
+    """The LSH band join: distinct ``(id_a, id_b)``, id_a < id_b, over
+    banded rows ``(__id, band_id, key)`` that share a ``(band_id, key)``
+    bucket. Every candidate generator here (MinHash self-join, incremental
+    store-vs-shard joins, sign-LSH ``cosine_candidate_pairs``) runs this
+    one equi-join, so a guard on its output size (Σ bucket_size² over the
+    ``(band_id, key)`` buckets) belongs here."""
+    a, b = a.alias("a"), b.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+            & (F.col("a.__id") < F.col("b.__id")),
+        )
+        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
 def _pairs_with_est(pair_ids, sig_df, id_col, sig_col):
     """Attach both signatures to deduplicated candidate pairs and compute
     the matching-minhash fraction (estimated Jaccard)."""
@@ -393,6 +357,18 @@ def _pairs_with_est(pair_ids, sig_df, id_col, sig_col):
         / F.size("sig_a")
     )
     return pairs.select("id_a", "id_b", est.cast("double").alias("est_jaccard"))
+
+
+def _near_dup_ids(pair_ids, sigs, id_col, threshold):
+    """The near-dup verdict shared by the batch and incremental operators:
+    the higher id of every candidate pair whose estimated Jaccard reaches
+    ``threshold``, as a distinct ``id_col`` frame to left-anti against."""
+    return (
+        _pairs_with_est(pair_ids, sigs, id_col, "minhash")
+        .filter(F.col("est_jaccard") >= threshold)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
 
 
 def minhash_dedup(
@@ -427,18 +403,10 @@ def minhash_dedup(
     sigs = tracked_persist(
         _signature_frame(df, text_col, id_col, num_hashes, shingle_n, hash_family)
     )
-    dupes = (
-        lsh_candidate_pairs(
-            sigs,
-            id_col=id_col,
-            sig_col="minhash",
-            bands=bands,
-            num_hashes=num_hashes,
-            hash_family=hash_family,
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
+    rows_per_band = max(1, num_hashes // bands)
+    banded = _banded(sigs, id_col, "minhash", bands, rows_per_band, hash_family)
+    dupes = _near_dup_ids(
+        _band_pairs(banded, banded, "band_hash"), sigs, id_col, threshold
     )
     return df.join(dupes, id_col, "left_anti")
 
@@ -511,35 +479,19 @@ def incremental_minhash_dedup(
             new_df, text_col, id_col, num_hashes, shingle_n, hash_family, seed
         )
     )
-    rows_per_band = max(1, num_hashes // bands)
     store_sigs = sig_store.select(F.col(id_col), "minhash")
     # the union feeds the banded a-side AND both signature re-attach joins
     # in _pairs_with_est — three consumers, so an unpersisted store plan
     # (or raw store scan) would execute three times (r8: measured 1.7x on
-    # the incremental query at sf0.1, interleaved min-of-3). Signature rows are (id, num_hashes
-    # longs) — tiny relative to the corpus they summarize.
+    # the incremental query at sf0.1, interleaved min-of-3). Signature rows
+    # are (id, num_hashes longs) — tiny relative to the corpus they
+    # summarize.
     union_sigs = tracked_persist(store_sigs.unionByName(new_sigs))
-    a = _banded(
-        union_sigs, id_col, "minhash", bands, rows_per_band, hash_family
-    ).alias("a")
-    b = _banded(
-        new_sigs, id_col, "minhash", bands, rows_per_band, hash_family
-    ).alias("b")
-    pair_ids = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    dupes = (
-        _pairs_with_est(pair_ids, union_sigs, id_col, "minhash")
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
+    rows_per_band = max(1, num_hashes // bands)
+    a = _banded(union_sigs, id_col, "minhash", bands, rows_per_band, hash_family)
+    b = _banded(new_sigs, id_col, "minhash", bands, rows_per_band, hash_family)
+    dupes = _near_dup_ids(
+        _band_pairs(a, b, "band_hash"), union_sigs, id_col, threshold
     )
     kept = new_df.join(dupes, id_col, "left_anti")
     return kept, new_sigs
@@ -647,34 +599,18 @@ def incremental_minhash_dedup_bucketed(
     b_new = tracked_persist(
         _banded(new_sigs, id_col, "minhash", bands, rows_per_band, hash_family)
     )
-    cond = lambda a, b: (  # noqa: E731
-        (F.col(f"{a}.band_id") == F.col(f"{b}.band_id"))
-        & (F.col(f"{a}.band_hash") == F.col(f"{b}.band_hash"))
-        & (F.col(f"{a}.__id") < F.col(f"{b}.__id"))
-    )
-    def _pairs(a_df):
-        return (
-            a_df.alias("a")
-            .join(b_new.alias("b"), cond("a", "b"))
-            .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        )
-
-    pair_ids = (
-        _pairs(store_bands)
-        .unionByName(_pairs(b_new))
-        .dropDuplicates(["id_a", "id_b"])
+    # old-vs-new and new-vs-new pairs are each distinct; a pair appears in
+    # both only when a shard id is already in the store (a retried shard),
+    # and the verdict's distinct id_b absorbs that repeat
+    pair_ids = _band_pairs(store_bands, b_new, "band_hash").unionByName(
+        _band_pairs(b_new, b_new, "band_hash")
     )
     union_sigs = (
         spark.table(f"{table_prefix}_sigs")
         .select(F.col(id_col), "minhash")
         .unionByName(new_sigs)
     )
-    dupes = (
-        _pairs_with_est(pair_ids, union_sigs, id_col, "minhash")
-        .filter(F.col("est_jaccard") >= threshold)
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
+    dupes = _near_dup_ids(pair_ids, union_sigs, id_col, threshold)
     kept = new_df.join(dupes, id_col, "left_anti")
     return kept, new_sigs
 
@@ -690,70 +626,6 @@ def append_signatures(
     )
 
 
-def simhash(col, bits: int = 64, seed: int = 11, hash_family: str = "xxhash") -> "F.Column":
-    """64-bit SimHash of the token set: per bit, sign of the sum over tokens
-    of (+1 / -1) from that token's hash bit. Pure array expressions.
-
-    SINGLE pass over the token hashes: one aggregate folds a ``bits``-wide
-    vote array via zip_with (the per-bit-aggregate formulation scanned the
-    hash array 64 times — O(64*tokens) expression tree); the aggregate's
-    finish lambda packs the votes into the signed 64-bit fingerprint.
-
-    hash_family="poly" swaps the JVM xxhash64 bit tests for parities of
-    affine maps of the polynomial char hash — bit_i(t) =
-    ((a_i*poly(t)+b_i) % POLY_MOD) % 2 — so the DuckDB oracle can recompute
-    the exact fingerprints."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = F.array_distinct(F.split(normalize_text(c), " "))
-    init = F.array(*[F.lit(0) for _ in range(bits)])
-
-    if hash_family == "xxhash":
-        hashes = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
-        positions = F.array(*[F.lit(i) for i in range(bits)])
-
-        def merge(acc, h):
-            return F.zip_with(
-                acc,
-                positions,
-                lambda a, i: a + F.when(F.getbit(h, i) == 1, 1).otherwise(-1),
-            )
-    elif hash_family == "poly":
-        a_l, b_l = affine_params(bits, seed)
-        ab = F.array(
-            *[
-                F.struct(
-                    F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
-                )
-                for a, b in zip(a_l, b_l)
-            ]
-        )
-        hashes = F.transform(toks, _poly_char_hash)
-
-        def merge(acc, h):
-            return F.zip_with(
-                acc,
-                ab,
-                lambda a, p: a
-                + F.when(
-                    F.pmod(F.pmod(p["a"] * h + p["b"], F.lit(POLY_MOD)), F.lit(2)) == 1,
-                    1,
-                ).otherwise(-1),
-            )
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-
-    def finish(votes):
-        out = F.lit(0).cast("long")
-        for i in range(bits):
-            bitval = (1 << i) if i < 63 else -(1 << 63)
-            out = out + F.when(
-                F.element_at(votes, i + 1) > 0, F.lit(bitval).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return out
-
-    return F.aggregate(hashes, init, merge, finish)
-
-
 def simhash_frame(
     df: DataFrame,
     text_col: str = "text",
@@ -762,14 +634,22 @@ def simhash_frame(
     seed: int = 11,
     hash_family: str = "xxhash",
 ) -> DataFrame:
-    """``(id, simhash64)`` for a whole table — value-identical to
-    ``select(id, simhash(text))`` but computed as ONE explode + codegen
-    HashAggregate: per distinct token ONE hash, then ``bits`` integer
-    vote sums (exact, order-independent) packed into the signed 64-bit
-    fingerprint — instead of the per-row interpreted fold allocating a
-    ``bits``-wide array per token (the `_signature_frame`/`band_buckets`
-    pattern; measured 2.7x at sf1.0). Null-text docs keep their NULL
-    fingerprint via the zero-token guard (explode_outer + vote count)."""
+    """``(id, simhash64)`` for a whole table: per bit, the sign of the sum
+    over the doc's distinct tokens of +1/-1 from that token's hash bit.
+    The only SimHash implementation in the library, computed as ONE
+    explode + codegen HashAggregate: per distinct token ONE hash, then
+    ``bits`` integer vote sums (exact, order-independent) packed into the
+    signed 64-bit fingerprint (the `_signature_frame`/`band_buckets`
+    pattern; measured 2.7x at sf1.0 against a per-row interpreted fold
+    allocating a ``bits``-wide array per token — that fold is the test
+    reference in ``tests/_hash_reference.py``). Null-text docs keep their
+    NULL fingerprint via the zero-token guard (explode_outer + vote
+    count).
+
+    hash_family="poly" swaps the xxhash64 bit tests for parities of affine
+    maps of the polynomial char hash — bit_i(t) =
+    ((a_i*poly(t)+b_i) % POLY_MOD) % 2 — so the DuckDB oracle can recompute
+    the exact fingerprints."""
     c = F.col(text_col)
     toks = F.array_distinct(F.split(normalize_text(c), " "))
     ex = df.select(F.col(id_col), F.explode_outer(toks).alias("__t"))

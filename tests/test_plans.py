@@ -137,13 +137,22 @@ def test_ivf_topk_plan_broadcasts_probe_cells(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_simhash_plan_single_projection(spark):
-    """Single-pass simhash: one aggregate expression, no join/exchange."""
-    from powershap_spark.operators.dedup import simhash
+def test_simhash_frame_plan_one_exchange(spark):
+    """Frame simhash: explode, then a partial+final HashAggregate pair on
+    doc_id around exactly one Exchange — no join, no sort."""
+    from powershap_spark.operators.dedup import simhash_frame
 
     d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(d.select("doc_id", simhash("text").alias("h")))
-    assert "Exchange" not in plan and "Join" not in plan
+    plan = _plan(simhash_frame(d))
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    assert nodes.count("Exchange") == 1, nodes
+    assert [k.split("#")[0] for k in _exchange_keys(plan)] == ["doc_id"]
+    # first aggregate function of each HashAggregate node
+    aggs = re.findall(
+        r"^\(\d+\) HashAggregate\n(?:.*\n)*?Functions \[\d+\]: \[(\w+)", plan, re.M
+    )
+    assert sorted(aggs) == ["count", "partial_count"], aggs
+    assert not any("Join" in n or "Sort" in n for n in nodes), nodes
 
 
 def test_turn_features_exchange_carries_only_narrow_ints(spark):

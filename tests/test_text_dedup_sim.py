@@ -5,13 +5,13 @@ import pandas as pd
 import pytest
 
 from powershap_spark.operators.dedup import (
+    build_minhash_signature_store,
     exact_dedup,
     lsh_candidate_pairs,
     minhash_dedup,
-    minhash_signature,
     ngram_jaccard_pairs,
     shingles,
-    simhash,
+    simhash_frame,
 )
 from powershap_spark.operators.multimodal import (
     attach_fake_media,
@@ -31,6 +31,8 @@ from powershap_spark.operators.text import (
     token_count,
 )
 from pyspark.sql import functions as F
+
+from tests._hash_reference import minhash_signature, simhash
 
 
 @pytest.fixture(scope="module")
@@ -67,9 +69,7 @@ def test_minhash_near_dup(spark, docs):
 
 
 def test_minhash_estimates_jaccard(spark, docs):
-    sigs = docs.select(
-        "doc_id", minhash_signature(shingles("text", 2), 128).alias("minhash")
-    )
+    sigs = build_minhash_signature_store(docs, num_hashes=128, shingle_n=2)
     pairs = lsh_candidate_pairs(sigs, bands=32, num_hashes=128).toPandas()
     exact = {(0, 1): 1.0}
     row01 = pairs[(pairs.id_a == 0) & (pairs.id_b == 1)]
@@ -90,7 +90,7 @@ def test_ngram_jaccard_pairs(spark, docs):
 
 
 def test_simhash_near_equals(spark, docs):
-    out = docs.select("doc_id", simhash("text").alias("h")).toPandas().set_index("doc_id").h
+    out = simhash_frame(docs).toPandas().set_index("doc_id").simhash
     assert out[0] == out[1]  # identical text -> identical simhash
     # near dup differs in few bits
     diff_bits = bin((int(out[0]) ^ int(out[3])) & (2**64 - 1)).count("1")
@@ -210,24 +210,108 @@ def test_lsh_topk_banded_self_hit_exact_rerank_and_recall_lift(spark, emb):
     assert rb > r1  # and for this seeded corpus the lift is real
 
 
-def test_lsh_topk_bands_one_matches_legacy_single_bucket(spark, emb):
+def test_lsh_topk_single_bucket_matches_band_buckets(spark, emb):
+    """The single-bucket branch of lsh_topk (per-vector lsh_bucket on the
+    table side) agrees with the frame bucketing: with k >= N, the
+    (query, vector) pairs it returns are exactly the vectors whose
+    band_buckets(n_bands=1) bucket equals the query's lsh_bucket."""
+    from powershap_spark.operators.similarity import band_buckets, lsh_bucket
+
     sdf, vecs = emb
-    queries = sdf.filter(F.col("vec_id") < 3).select(
+    queries = sdf.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    a = (
-        lsh_topk(sdf, queries, k=4, n_planes=4)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
+    n_planes = 3
+    for fam in ("xxhash", "poly"):
+        got = {
+            (r.query_id, r.vec_id)
+            for r in lsh_topk(
+                sdf, queries, k=len(vecs), n_planes=n_planes, hash_family=fam
+            ).collect()
+        }
+        table = band_buckets(sdf, n_planes=n_planes, n_bands=1, hash_family=fam)
+        qb = queries.select(
+            "query_id",
+            lsh_bucket("query_vec", n_planes, hash_family=fam).alias("bucket"),
+        )
+        want = {
+            (r.query_id, r["__id"])
+            for r in table.join(qb, "bucket").select("query_id", "__id").collect()
+        }
+        assert got == want, fam
+        assert {q for q, _ in got} == set(range(5))
+
+
+def test_band_buckets_sign_jobs_do_not_grow_with_bands(spark, emb):
+    """band_buckets computes every (band, plane) sign column in ONE Spark
+    job, so the jobs it runs while building the plan do not depend on
+    n_bands (one sign job per band ran 5 jobs at n_bands=1 and 26 at
+    n_bands=8)."""
+    from powershap_spark.operators.similarity import band_buckets
+
+    sdf, _ = emb
+    sc = spark.sparkContext
+
+    def jobs_at_plan_time(n_bands):
+        group = f"band_buckets_jobs_{n_bands}"
+        sc.setJobGroup(group, group)
+        try:
+            band_buckets(sdf, n_planes=4, n_bands=n_bands)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, eight = jobs_at_plan_time(1), jobs_at_plan_time(8)
+    assert one > 0
+    assert one == eight, (one, eight)
+
+
+def test_signature_frame_matches_reference_fold(spark):
+    """_signature_frame (explode + codegen hash-aggregate) equals the
+    per-row reference fold for both hash families, across seeds and
+    shingle widths, including duplicate, short, empty, whitespace-only and
+    null texts."""
+    from powershap_spark.operators.dedup import _signature_frame, hashed_shingles
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "the quick brown fox jumps over the lazy dog",
+        "The  Quick brown fox\tjumps over the lazy cat",
+        "two words",
+        "one",
+        "",
+        "   \t  ",
+        None,
+    ] + [f"tok{i % 7} tok{i % 5} tok{i % 3} tok{i}" for i in range(24)]
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    b = (
-        lsh_topk(sdf, queries, k=4, n_planes=4, n_bands=1)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    num_hashes = 16
+    for fam in ("xxhash", "poly"):
+        for seed in (7, 13):
+            for n in (2, 3):
+                sh = (
+                    hashed_shingles("text", n)
+                    if fam == "xxhash"
+                    else shingles("text", n)
+                )
+                ref = {
+                    r.doc_id: list(r.m)
+                    for r in docs.select(
+                        "doc_id",
+                        minhash_signature(
+                            sh, num_hashes, seed=seed, hash_family=fam
+                        ).alias("m"),
+                    ).collect()
+                }
+                got = {
+                    r.doc_id: list(r.minhash)
+                    for r in _signature_frame(
+                        docs, "text", "doc_id", num_hashes, n, fam, seed=seed
+                    ).collect()
+                }
+                assert got == ref, (fam, seed, n)
 
 
 def test_multimodal_image_features(spark, docs):
@@ -270,22 +354,16 @@ def test_poly_hash_family_parity(spark, docs):
     """The oracle-replicable poly family keeps the dedup semantics: exact
     dups share signatures/fingerprints, near dups stay close."""
     sigs = (
-        docs.select(
-            "doc_id",
-            minhash_signature(shingles("text", 2), 16, hash_family="poly").alias("m"),
+        build_minhash_signature_store(
+            docs, num_hashes=16, shingle_n=2, hash_family="poly"
         )
         .toPandas()
         .set_index("doc_id")
-        .m
+        .minhash
     )
     assert list(sigs[0]) == list(sigs[1])
     assert all(0 <= v < 1_000_000_007 for v in sigs[0])
-    sh = (
-        docs.select("doc_id", simhash("text", hash_family="poly").alias("h"))
-        .toPandas()
-        .set_index("doc_id")
-        .h
-    )
+    sh = simhash_frame(docs, hash_family="poly").toPandas().set_index("doc_id").simhash
     assert sh[0] == sh[1]
     diff_bits = bin((int(sh[0]) ^ int(sh[3])) & (2**64 - 1)).count("1")
     far_bits = bin((int(sh[0]) ^ int(sh[4])) & (2**64 - 1)).count("1")
@@ -381,8 +459,6 @@ def test_simhash_frame_matches_expression(spark):
     """Frame-level simhash (explode + codegen vote aggregate, r8) must be
     bit-identical to the per-row expression fold for both hash families,
     including null-text (NULL fingerprint) and empty-text docs."""
-    from powershap_spark.operators.dedup import simhash, simhash_frame
-
     texts = [None, "", "alpha beta alpha", "beta  gamma\tdelta", "x"] + [
         f"tok{i % 7} tok{i % 5} tok{i}" for i in range(60)
     ]
@@ -560,9 +636,7 @@ def test_hashed_shingles_equivalent_to_string_shingles(spark, docs):
     assert h[0] == h[1]
     assert h[0] != h[4]
 
-    sig_h = docs.select(
-        "doc_id", minhash_signature(hashed_shingles("text", 2), 128).alias("minhash")
-    )
+    sig_h = build_minhash_signature_store(docs, num_hashes=128, shingle_n=2)
     pairs_h = lsh_candidate_pairs(sig_h, bands=32, num_hashes=128).toPandas()
     row01 = pairs_h[(pairs_h.id_a == 0) & (pairs_h.id_b == 1)]
     assert len(row01) == 1 and row01.est_jaccard.iloc[0] == 1.0
@@ -902,10 +976,7 @@ def test_signature_frame_merges_duplicate_ids(spark):
     """id_col must be unique: the signature aggregation groups by id, so
     rows sharing an id merge into ONE element-wise-min signature (the
     signature of the union of their shingle sets)."""
-    from powershap_spark.operators.dedup import (
-        build_minhash_signature_store,
-        hashed_shingles,
-    )
+    from powershap_spark.operators.dedup import hashed_shingles
 
     a, b = "alpha beta gamma delta epsilon", "zeta eta theta iota kappa"
     df = spark.createDataFrame(

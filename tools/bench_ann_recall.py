@@ -47,6 +47,8 @@ def main():
 
     from powershap_spark.session import get_spark
     from powershap_spark.operators.similarity import (
+        _query_band_buckets,
+        band_buckets,
         brute_force_topk,
         ivf_topk,
         lsh_bucket,
@@ -105,38 +107,14 @@ def main():
         )
 
     for n_planes, n_bands in ((8, 2), (8, 4), (8, 8), (8, 16), (10, 8), (10, 16)):
-        eb = emb.select(
-            "vec_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            lsh_bucket("embedding", n_planes, seed=5 + b).alias(
-                                "bucket"
-                            ),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("__band"),
-        ).select("vec_id", "__band.band_id", "__band.bucket")
-        qb = queries.select(
-            "query_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            lsh_bucket("query_vec", n_planes, seed=5 + b).alias(
-                                "bucket"
-                            ),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("__band"),
-        ).select("query_id", "__band.band_id", "__band.bucket")
+        # the candidate sets lsh_topk builds: frame bucketing on the table
+        # side, the per-vector expression on the query side
+        eb = band_buckets(emb, n_planes=n_planes, n_bands=n_bands).withColumnRenamed(
+            "__id", "vec_id"
+        )
+        qb = _query_band_buckets(
+            queries, "query_id", F.col("query_vec"), n_planes, n_bands, 5, "xxhash"
+        )
         n_cand = (
             eb.join(F.broadcast(qb), ["band_id", "bucket"])
             .select("query_id", "vec_id")
