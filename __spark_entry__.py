@@ -659,12 +659,12 @@ def q_tfidf_keywords_documents(spark, sf_dir):
 
 def q_corpus_stats_windowed(spark, sf_dir):
     """Event-time windowed corpus monitoring (streaming_corpus_stats run
-    in its batch mode — same code path the streaming parity test drives
-    with readStream): per (hourly window, lang) doc count, mean quality,
-    total whitespace tokens. Event time is derived deterministically
+    in its batch mode — same code path the corpus-stats parity test
+    drives with readStream): per (hourly window, lang) doc count, mean
+    quality, total whitespace tokens. Event time is derived deterministically
     from doc_id (one doc per minute from 2024-01-01 00:00 UTC) so the
     DuckDB oracle reproduces the exact same windows with time_bucket."""
-    from powershap_spark.streaming import streaming_corpus_stats
+    from powershap_spark.operators.text import streaming_corpus_stats
 
     d = _read(spark, sf_dir, "documents").withColumn(
         "ts", F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id") * 60)
@@ -1355,22 +1355,16 @@ def q_embedding_cosine_dedup(spark, sf_dir):
     of 8 planes — narrow buckets keep the self-join ~linear, bands buy back
     recall; poly family so the oracle can rebuild every band's buckets),
     cosine >= 0.9 drops the higher vec_id."""
-    from powershap_spark.caching import tracking_scope
     from powershap_spark.operators.similarity import embedding_cosine_dedup
 
     emb = _read(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    # scope the operator's internal persist so repeated driver calls don't
-    # accumulate cached DataFrames in the global registry
-    with tracking_scope():
-        out = embedding_cosine_dedup(
-            emb, threshold=0.9, n_planes=8, n_bands=4, hash_family="poly"
-        )
-        out = spark.createDataFrame(
-            out.select("vec_id").toPandas(), "vec_id long"
-        )
-    return out
+    # persist=False registers nothing, so repeated driver calls accumulate
+    # no cached DataFrames, and the returned plan is the band join itself
+    return embedding_cosine_dedup(
+        emb, threshold=0.9, n_planes=8, n_bands=4, hash_family="poly", persist=False
+    ).select("vec_id")
 
 
 import os as _os

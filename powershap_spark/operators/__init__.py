@@ -16,7 +16,6 @@ from .windows import (
     rolling,
     session_gap,
     sessionize,
-    text_stats,
     time_rolling,
 )
 
@@ -46,6 +45,5 @@ __all__ = [
     "rolling",
     "session_gap",
     "sessionize",
-    "text_stats",
     "time_rolling",
 ]

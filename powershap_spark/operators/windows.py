@@ -40,7 +40,6 @@ __all__ = [
     "ffill",
     "bfill",
     "transition_counts",
-    "text_stats",
     "text_stats_ints",
     "build_features",
 ]
@@ -240,7 +239,7 @@ def text_stats_ints(text_col: str = "text") -> dict[str, Column]:
     (the regex variant burned 550 CPU-s on a 6.7M-row pass where a
     translate-based one burns ~30). Token semantics assume
     single-space-separated text (true for transcript corpora normalized at
-    ingest); for arbitrary whitespace use ``text_stats`` (regex, exact).
+    ingest).
 
     Shuffle-lean: ONLY int32 scalars. The ratio features are reconstructed
     AFTER the per-conversation window shuffle from these ints
@@ -267,28 +266,6 @@ def text_stats_ints(text_col: str = "text") -> dict[str, Column]:
         "n_tokens": n_tokens.cast("int"),
         "n_nonspace": n_nonspace.cast("int"),
         "n_punct": (n_nonspace - n_alnum_like).cast("int"),
-    }
-
-
-def text_stats(text_col: str = "text") -> dict[str, Column]:
-    """Scalar per-turn text statistics; all built-in string functions."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    tokens = F.split(F.trim(t), r"\s+")
-    n_tokens = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(F.size(tokens))
-    return {
-        "text_len": n_chars.cast("int"),
-        "n_tokens": n_tokens.cast("int"),
-        "avg_token_len": F.when(
-            n_tokens > 0, F.length(F.regexp_replace(t, r"\s+", "")) / n_tokens
-        ).cast("double"),
-        "n_punct": F.length(t) - F.length(F.regexp_replace(t, r"[\.,;:!\?]", "")),
-        "upper_ratio": F.when(
-            n_chars > 0,
-            (
-                F.length(F.regexp_replace(t, r"[^A-Z]", "")) / n_chars
-            ),
-        ).cast("double"),
     }
 
 

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["read_warc", "read_warc_gz", "read_warc_stream", "warc_stats"]
+__all__ = ["read_warc", "read_warc_gz", "warc_stats"]
 
 _SEP = "\r\n\r\nWARC/1.0\r\n"
 
@@ -169,25 +169,6 @@ def read_warc_gz(
     rows = sc.parallelize(chunks, n_tasks).mapPartitions(scan_decode)
     raw_df = spark.createDataFrame(rows, "value string")
     return _parse_warc(raw_df)
-
-
-def read_warc_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming twin of :func:`read_warc` — continuous crawl ingestion:
-    new ``.warc`` files landing in ``path`` become micro-batches of
-    parsed records (the FileStreamSource tracks per-file progress, so a
-    restart never re-parses completed shards; ``max_files_per_trigger``
-    bounds each micro-batch — it is a SOURCE option, set here, not on
-    the writer where it would be silently ignored). The record-splitting
-    and parse expressions are byte-identical to the batch reader (shared
-    ``_parse_warc``); stream==batch parity is pytest-asserted. Compose
-    with ``extract_html_text`` + ``streaming_exact_dedup`` for the
-    arrival-time curation pipeline."""
-    reader = spark.readStream.option("lineSep", _SEP)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return _parse_warc(reader.text(path))
 
 
 def _parse_warc(raw: DataFrame) -> DataFrame:

@@ -9,17 +9,26 @@ from pyspark.sql import functions as F
 from powershap_spark.caching import release_tracked, tracked_persist, tracking_scope
 
 
+_baseline = 0
+
+
 @pytest.fixture(autouse=True)
 def _clean(spark):
+    global _baseline
     spark.catalog.clearCache()
     release_tracked()
+    _baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
     yield
     spark.catalog.clearCache()
     release_tracked()
 
 
 def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    """Persistent RDDs added since the test began. The JVM count also holds
+    RDDs that earlier test files left persisted outside the registry and
+    the cache manager, so the asserts compare against the count that the
+    ``_clean`` fixture recorded, not against zero."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size() - _baseline
 
 
 def test_minhash_dedup_cache_is_released(spark):

@@ -458,46 +458,3 @@ def test_read_warc_gz_member_split_parity(spark, tmp_path):
     tp = read_warc_gz(spark, str(cut)).toPandas()
     assert len(tp) == len(base)  # every member surfaced, last one truncated
     assert tp._warc_malformed.sum() == base._warc_malformed.sum() + 1
-
-
-def test_warc_stream_matches_batch(spark, tmp_path):
-    """Continuous crawl ingestion: read_warc_stream over a landing dir,
-    drained availableNow one file per micro-batch, parses byte-identically
-    to the batch reader (shared parse expressions)."""
-    import os
-    import shutil
-
-    from powershap_spark.sources.warc import read_warc, read_warc_stream
-
-    fix = os.path.join(os.path.dirname(__file__), "fixtures", "docs_small.warc")
-    land = tmp_path / "landing"
-    land.mkdir()
-    shutil.copy(fix, land / "shard0.warc")
-    shutil.copy(fix, land / "shard1.warc")  # a second arrival
-
-    q = (
-        read_warc_stream(spark, str(land), max_files_per_trigger=1)
-        .writeStream.format("memory")
-        .queryName("warc_stream_parity")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # the source option really split the drain: one file per micro-batch
-    assert len(q.recentProgress) >= 2, [p.numInputRows for p in q.recentProgress]
-
-    got = (
-        spark.sql("select * from warc_stream_parity")
-        .toPandas()
-        .sort_values(["record_id", "payload"], na_position="last")
-        .reset_index(drop=True)
-    )
-    want = (
-        read_warc(spark, str(land))
-        .toPandas()
-        .sort_values(["record_id", "payload"], na_position="last")
-        .reset_index(drop=True)
-    )
-    assert len(got) == 12  # 6 records x 2 shards
-    assert got.equals(want)

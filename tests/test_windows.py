@@ -16,7 +16,6 @@ from powershap_spark.operators.windows import (
     rolling,
     session_gap,
     sessionize,
-    text_stats,
     time_rolling,
 )
 from tests.conftest import events_pdf
@@ -203,15 +202,6 @@ def test_salted_cumsum_strict_past(spark):
         .reset_index(drop=True)
     )
     assert np.allclose(out.cs, exp, atol=1e-9)
-
-
-def test_text_stats(spark):
-    pdf = pd.DataFrame({"text": ["Hello, World! How are you?", "", "ONE two", "  a  b  "]})
-    out = spark.createDataFrame(pdf).withColumns(text_stats("text")).toPandas()
-    assert list(out.text_len) == [26, 0, 7, 8]
-    assert list(out.n_tokens) == [5, 0, 2, 2]
-    assert list(out.n_punct) == [3, 0, 0, 0]
-    assert out.upper_ratio[2] == pytest.approx(3 / 7)
 
 
 def test_turn_features_skew_safe_parity(spark):

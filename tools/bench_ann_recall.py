@@ -13,6 +13,7 @@ For each variant we report:
 Usage:
   python tools/bench_ann_recall.py [sf_dir] [k] [n_queries]
 Defaults: $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1, k=10, 32 queries.
+The session is sized from $SPARK_GRAFT_CPUS (``get_spark``).
 
 Prints one JSON line (machine-readable) after a human table.
 """
@@ -56,7 +57,7 @@ def main():
         stride_centroids,
     )
 
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark()
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
