@@ -314,8 +314,9 @@ def q_exact_dedup_documents(spark, sf_dir):
     return exact_dedup(d, "text", "doc_id").select("doc_id", "lang", "source")
 
 
-def q_token_jaccard_pairs(spark, sf_dir):
-    d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+def _token_jaccard_pairs(d):
+    """``(id_a, id_b, jaccard)``: the unrounded token-set Jaccard of every
+    same-lang doc pair, id_a < id_b."""
     toks = lambda c: F.array_distinct(
         F.split(F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " ")
     )
@@ -324,12 +325,14 @@ def q_token_jaccard_pairs(spark, sf_dir):
     j = a.join(b, "lang").filter(F.col("id_a") < F.col("id_b"))
     inter = F.size(F.array_intersect("ta", "tb"))
     union = F.size(F.array_union("ta", "tb"))
+    return j.select("id_a", "id_b", (inter / union).alias("jaccard"))
+
+
+def q_token_jaccard_pairs(spark, sf_dir):
+    d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return (
-        j.select(
-            "id_a",
-            "id_b",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
+        _token_jaccard_pairs(d)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.5)
     )
 
@@ -340,19 +343,16 @@ def q_dedup_clusters_documents(spark, sf_dir):
     distributed connected components (hash-min label propagation) ->
     (doc_id, component) with component = min doc_id of the cluster;
     isolated docs are their own component. DuckDB oracle recomputes the
-    same components with a recursive CTE."""
+    same components with a recursive CTE. The edge filter reads the
+    unrounded ratio, as the oracle does."""
     from powershap_spark.operators.dedup import connected_components
 
     d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    toks = lambda c: F.array_distinct(
-        F.split(F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " ")
+    pairs = (
+        _token_jaccard_pairs(d)
+        .where(F.col("jaccard") >= 0.5)
+        .select("id_a", "id_b")
     )
-    a = d.select(F.col("doc_id").alias("id_a"), toks(F.col("text")).alias("ta"), "lang")
-    b = d.select(F.col("doc_id").alias("id_b"), toks(F.col("text")).alias("tb"), "lang")
-    j = a.join(b, "lang").filter(F.col("id_a") < F.col("id_b"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    union = F.size(F.array_union("ta", "tb"))
-    pairs = j.select("id_a", "id_b").where(inter / union >= 0.5)
     comp = connected_components(pairs)
     return (
         d.select("doc_id")

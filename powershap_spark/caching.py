@@ -79,6 +79,19 @@ def _release(dfs: list) -> int:
     return n
 
 
+def _release_frame(df) -> None:
+    """Drop every block ``df`` holds: its cache entry and, when ``df`` is a
+    ``localCheckpoint``, the checkpoint's blocks — ``unpersist()`` alone
+    leaves those to the ContextCleaner, because they belong to the RDD
+    under the checkpoint's ``LogicalRDD`` plan, not to the cache manager.
+    Only for frames the caller made itself and never reads again: a
+    released local checkpoint cannot be recomputed."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 class tracking_scope:
     """Context manager: persists registered inside are released on exit —
     and ONLY those, so concurrent pipelines don't release each other's."""

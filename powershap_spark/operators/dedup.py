@@ -40,9 +40,6 @@ __all__ = [
     "corpus_diff",
     "build_minhash_signature_store",
     "incremental_minhash_dedup",
-    "incremental_minhash_dedup_bucketed",
-    "write_banded_signature_store",
-    "append_banded_signatures",
     "append_signatures",
     "affine_params",
     "POLY_MOD",
@@ -497,124 +494,6 @@ def incremental_minhash_dedup(
     return kept, new_sigs
 
 
-def write_banded_signature_store(
-    sigs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_family: str = "xxhash",
-    n_buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """Persist the signature store in its BANDED form, bucketed by the band
-    join key — the 10^12-scale layout (BENCH/ANALYSIS_r06 §6): the daily
-    incremental band join then scans the store IN PLACE (zero Exchange on
-    the store side — Spark matches the bucket spec to the join's required
-    distribution) and only the new shard shuffles into the store's
-    bucketing. Two metastore tables:
-
-      {prefix}_bands  (id, band_id, band_hash), bucketed by
-                      (band_id, band_hash) into ``n_buckets``
-      {prefix}_sigs   (id, minhash) — candidate signature re-attach
-
-    Same store contract as ``build_minhash_signature_store``: ALL ingested
-    ids, kept or dropped. Append new shards with
-    ``append_banded_signatures`` (same bucket spec, id-idempotent)."""
-    from ..sources.tableio import write_bucketed
-
-    rows_per_band = max(1, num_hashes // bands)
-    banded = _banded(sigs, id_col, "minhash", bands, rows_per_band, hash_family)
-    write_bucketed(
-        banded.withColumnRenamed("__id", id_col),
-        f"{table_prefix}_bands",
-        ["band_id", "band_hash"],
-        n_buckets=n_buckets,
-        path=f"{path}_bands" if path else None,
-    )
-    w = sigs.select(id_col, "minhash").write.mode("overwrite")
-    if path:
-        w = w.option("path", f"{path}_sigs")
-    w.saveAsTable(f"{table_prefix}_sigs")
-
-
-def append_banded_signatures(
-    spark,
-    table_prefix: str,
-    new_sigs: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_family: str = "xxhash",
-    n_buckets: int = 32,
-) -> None:
-    """Id-idempotent append of a shard's signatures to the banded store
-    (both tables); a retried shard adds no duplicate rows. The bands
-    append re-declares the identical bucket spec so the store stays
-    bucket-aligned for the zero-exchange daily join."""
-    fresh = new_sigs.join(
-        spark.table(f"{table_prefix}_sigs").select(id_col), id_col, "left_anti"
-    )
-    rows_per_band = max(1, num_hashes // bands)
-    banded = _banded(fresh, id_col, "minhash", bands, rows_per_band, hash_family)
-    banded.withColumnRenamed("__id", id_col).write.mode("append").bucketBy(
-        int(n_buckets), "band_id", "band_hash"
-    ).saveAsTable(f"{table_prefix}_bands")
-    fresh.select(id_col, "minhash").write.mode("append").saveAsTable(
-        f"{table_prefix}_sigs"
-    )
-
-
-def incremental_minhash_dedup_bucketed(
-    new_df: DataFrame,
-    spark,
-    table_prefix: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-    hash_family: str = "xxhash",
-    seed: int = 7,
-):
-    """``incremental_minhash_dedup`` against a ``write_banded_signature_
-    store`` layout: value-identical kept set (pytest-pinned), but the
-    old-vs-new band join reads the store's pre-bucketed (band_id,
-    band_hash) table with NO store-side exchange — at 10^12 ids the store
-    band rows are the join's dominant shuffle, and this layout deletes it.
-    The new-vs-new pairs come from a shard self-join (shard-sized).
-    Returns ``(kept_new_docs, new_sigs)`` like the unbucketed variant."""
-    from ..caching import tracked_persist
-
-    new_sigs = tracked_persist(
-        build_minhash_signature_store(
-            new_df, text_col, id_col, num_hashes, shingle_n, hash_family, seed
-        )
-    )
-    rows_per_band = max(1, num_hashes // bands)
-    store_bands = (
-        spark.table(f"{table_prefix}_bands").withColumnRenamed(id_col, "__id")
-    )
-    b_new = tracked_persist(
-        _banded(new_sigs, id_col, "minhash", bands, rows_per_band, hash_family)
-    )
-    # old-vs-new and new-vs-new pairs are each distinct; a pair appears in
-    # both only when a shard id is already in the store (a retried shard),
-    # and the verdict's distinct id_b absorbs that repeat
-    pair_ids = _band_pairs(store_bands, b_new, "band_hash").unionByName(
-        _band_pairs(b_new, b_new, "band_hash")
-    )
-    union_sigs = (
-        spark.table(f"{table_prefix}_sigs")
-        .select(F.col(id_col), "minhash")
-        .unionByName(new_sigs)
-    )
-    dupes = _near_dup_ids(pair_ids, union_sigs, id_col, threshold)
-    kept = new_df.join(dupes, id_col, "left_anti")
-    return kept, new_sigs
-
-
 def append_signatures(
     store: DataFrame, new_sigs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -753,6 +632,12 @@ def connected_components(
     the job (acceptable for this sandbox's single JVM; set a checkpoint
     dir for production runs).
 
+    Each round's local checkpoint is released as soon as the next round
+    has materialized, and the last one when the loop does not converge.
+    The returned frame reads the final round's checkpoint, so it owns
+    it: those blocks stay until the ContextCleaner frees them once the
+    frame is garbage collected.
+
     Reliable-checkpoint storage caveat: Spark does NOT delete reliable
     checkpoint files by default — each round writes one labels-table copy
     under the checkpoint dir and they outlive the job unless
@@ -765,6 +650,8 @@ def connected_components(
     Scale shape: never materializes components on the driver; the only
     per-round action is the convergence count. For graphs with genuinely
     long chains raise ``max_iter`` (rounds, not data, are the cost)."""
+    from ..caching import _release_frame
+
     reliable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
 
     def _ckpt(df: DataFrame) -> DataFrame:
@@ -778,7 +665,7 @@ def connected_components(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    labels = _ckpt(
+    held = labels = _ckpt(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
@@ -797,10 +684,9 @@ def connected_components(
         )
         # one update join per round; the convergence flag rides the same
         # pass (a __chg column on the checkpointed result) instead of a
-        # third labels-join. Superseded localCheckpoint blocks are released
-        # by Spark's ContextCleaner once the old DataFrame reference drops;
-        # reliable checkpoint files need cleanCheckpoints=true (see
-        # docstring caveat).
+        # third labels-join. The eager checkpoint cut the lineage, so the
+        # superseded round's blocks go now; reliable checkpoint files need
+        # cleanCheckpoints=true (see docstring caveat).
         nc = F.coalesce(F.col("nbr_comp"), F.col("comp"))
         new = _ckpt(
             labels.join(nbr_min, "id", "left")
@@ -810,10 +696,13 @@ def connected_components(
                 (nc < F.col("comp")).cast("long").alias("__chg"),
             )
         )
+        _release_frame(held)
+        held = new
         changed = new.agg(F.sum("__chg")).collect()[0][0] or 0
         labels = new.select("id", "comp")
         if changed == 0:
-            return labels
+            return labels  # the returned frame owns `held`
+    _release_frame(held)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
         "raise max_iter (long chains) or check the pair generator"

@@ -705,13 +705,17 @@ def _local_bpe_induction(word_counts, n_merges: int):
     return merges
 
 
+# bpe_learn's distributed loop: merges learned per vocab-rewrite pass (3x
+# fewer jobs than one per pass at 256 merges, BENCH/ANALYSIS_r07.md §1),
+# and passes between lineage-cutting local checkpoints
+_BPE_BATCH_SIZE = 8
+_BPE_CHECKPOINT_EVERY = 8
+
+
 def bpe_learn(
     docs,
     n_merges: int,
     text_col: str = "text",
-    checkpoint_every: int = 8,
-    batch_size: int = 8,
-    mode: str = "auto",
     max_local_vocab: int = 2_000_000,
 ):
     """Distributed BPE tokenizer induction (Sennrich et al.,
@@ -727,53 +731,45 @@ def bpe_learn(
     Scale shape — the textbook BPE trick IS the distributed design:
     merges are learned on the WORD-FREQUENCY DICTIONARY, not the raw
     corpus, so the corpus is touched exactly once (token count collapse,
-    the same map-side-combined shuffle as every counting operator here)
-    and each of the ``n_merges`` iterations runs on the vocab-sized
-    table (distinct words — orders of magnitude smaller, still
-    distributed: 10^8 rows at web scale). Per PASS: pair counts are a
-    partial+final SUM over exploded adjacent symbol pairs, the ranked
-    top rows are ONE bounded collect (the repo's scalar-action
-    convention, like connected_components' convergence checks), and the
-    merge application is a pure JVM left-fold over each word's symbol
-    array (non-overlapping, left-to-right). Up to ``batch_size`` merges
-    are learned per pass — the maximal ranked prefix of pairwise
-    NON-INTERACTING pairs with a strict count gap to the first excluded
-    row, which is provably bit-identical to one-merge-at-a-time greedy
-    (see the in-loop proof note) — so a production 32k-merge induction
-    needs ~n_merges/batch_size Spark jobs, not n_merges
-    (``batch_size=1`` restores the textbook one-job-per-merge loop).
-    The evolving vocab re-persists every pass with the previous handle
-    released; every ``checkpoint_every`` passes the lineage is cut via
-    localCheckpoint (same chain-control as connected_components).
+    the same map-side-combined shuffle as every counting operator here).
+    The dictionary is vocab-sized — even a 100-TB corpus collapses to
+    ~10^7 distinct words — so a bounded probe
+    (``limit(max_local_vocab+1)`` over the persisted counts; at most
+    budget+1 rows cross the driver) picks the path:
 
-    Hybrid driver-local induction (r8, VERDICT r7 #3): the word-frequency
-    dictionary is vocab-sized — even a 100-TB corpus collapses to ~10^7
-    distinct words — so when it fits ``max_local_vocab`` rows the
-    dictionary is collected ONCE and the exact Sennrich loop runs locally
-    (``_local_bpe_induction``, bit-identical by construction and pinned
-    against both the python reference and the distributed path): ONE
-    Spark job total instead of ~n_merges/batch_size. ``mode``:
+    - the dictionary fits ``max_local_vocab`` rows: it is collected ONCE
+      and the exact Sennrich loop runs on the driver
+      (``_local_bpe_induction``) — one Spark job in total;
+    - it overflows (``max_local_vocab=0`` always does): the merges are
+      learned on the distributed vocab table. Per PASS: pair counts are
+      a partial+final SUM over exploded adjacent symbol pairs, the ranked
+      top rows are ONE bounded collect (the repo's scalar-action
+      convention, like connected_components' convergence checks), and
+      the merge application is a pure JVM left-fold over each word's
+      symbol array (non-overlapping, left-to-right). Up to
+      ``_BPE_BATCH_SIZE`` merges are learned per pass — the maximal
+      ranked prefix of pairwise NON-INTERACTING pairs with a strict count
+      gap to the first excluded row, which is provably bit-identical to
+      one-merge-at-a-time greedy (see the in-loop proof note). The
+      evolving vocab re-persists every pass with the previous handle
+      released; every ``_BPE_CHECKPOINT_EVERY`` passes the lineage is cut
+      via localCheckpoint (same chain-control as connected_components).
 
-    - ``"auto"`` (default): probe the dictionary size with a bounded
-      collect (``limit(max_local_vocab+1)`` over the persisted counts —
-      at most budget+1 rows cross the driver) and pick local/distributed;
-    - ``"local"``: force local, raising if the dictionary overflows;
-    - ``"distributed"``: the r7 batched loop, unchanged."""
+    Both paths give the same merge table (pinned against each other and
+    against the python reference). The merges are on the driver when
+    this returns, so everything it persisted or checkpointed is released
+    first, on success or failure."""
     from pyspark import StorageLevel
+
+    from ..caching import _release_frame
 
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if batch_size < 1:
-        raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    if mode not in ("auto", "local", "distributed"):
-        raise ValueError(f"mode must be auto|local|distributed, got {mode!r}")
 
     spark = docs.sparkSession
     toks = _tokens(text_col)
+    # persisted: the probe's corpus collapse is reused by the distributed
+    # loop instead of recomputed
     wc = (
         docs.select(F.explode(toks).alias("__w"))
         # _tokens trims spaces only, so tab/newline-padded text yields a
@@ -784,40 +780,8 @@ def bpe_learn(
         .filter(F.length("__w") > 0)
         .groupBy("__w")
         .agg(F.count("*").alias("__c"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-    wc_handle = None
-    if mode != "distributed":
-        # persist so the probe's corpus collapse is reused by the
-        # distributed fallback instead of recomputed
-        wc_handle = wc.persist(StorageLevel.MEMORY_AND_DISK)
-        probe = wc_handle.limit(int(max_local_vocab) + 1).collect()
-        if len(probe) <= int(max_local_vocab):
-            merges = _local_bpe_induction(
-                ((r["__w"], r["__c"]) for r in probe), n_merges
-            )
-            wc_handle.unpersist()
-            return spark.createDataFrame(
-                merges or [],
-                "merge_idx int, left string, right string, pair_count long",
-            )
-        if mode == "local":
-            wc_handle.unpersist()
-            raise ValueError(
-                f"mode='local' but the word dictionary exceeds "
-                f"max_local_vocab={max_local_vocab} rows"
-            )
-
-    vocab = wc.select(
-        F.col("__c"),
-        F.regexp_extract_all(F.col("__w"), F.lit("."), 0).alias("__s"),
-    )
-    # LAZY persist: the first pass's ranked-pairs collect materializes the
-    # cache as a side effect, so no separate count() job is ever paid —
-    # the parent handle is released only AFTER the child materialized
-    # (deferred unpersist below), keeping lineage recompute impossible
-    # while halving the per-pass job count vs eager persist+count.
-    vocab = vocab.persist(StorageLevel.MEMORY_AND_DISK)
 
     def _pair_counts(v):
         n = F.size(F.col("__s"))
@@ -874,81 +838,102 @@ def bpe_learn(
         )
         return v.select(F.col("__c"), merged.alias("__s"))
 
-    merges = []
-    cap = max(1, int(batch_size))
-    n_passes = 0
-    prev = None
-    while len(merges) < int(n_merges):
-        want = min(cap, int(n_merges) - len(merges))
-        ranked = (
-            _pair_counts(vocab)
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("left").asc(),
-                F.col("right").asc(),
+    vocab = prev = None
+    try:
+        probe = wc.limit(int(max_local_vocab) + 1).collect()
+        if len(probe) <= int(max_local_vocab):
+            merges = _local_bpe_induction(
+                ((r["__w"], r["__c"]) for r in probe), n_merges
             )
-            .limit(want + 1)
-            .collect()
+            return spark.createDataFrame(
+                merges or [],
+                "merge_idx int, left string, right string, pair_count long",
+            )
+
+        vocab = wc.select(
+            F.col("__c"),
+            F.regexp_extract_all(F.col("__w"), F.lit("."), 0).alias("__s"),
         )
-        # this collect just materialized `vocab`'s cache; the parent
-        # handle (previous pass's vocab) is now safe to release
-        if prev is not None:
-            prev.unpersist()
-            prev = None
-        if not ranked:
-            break
-        # Batch selection — PROVABLY identical to sequential greedy:
-        # accept the maximal ranked prefix whose pairs are pairwise
-        # non-interacting (no symbol of one appears as a symbol — or as
-        # the merged output l+r — of another), then truncate so every
-        # accepted pair beyond the first counts STRICTLY more than the
-        # first non-accepted row (c_stop). Why this is exact: applying
-        # disjoint merges leaves each other's counts unchanged, every
-        # DECREASED pair contains an accepted symbol, and every NEW pair
-        # (x, ab) is a subset of occurrences of an old pair (x, a) that
-        # interacts with the batch — and any interacting pair ranks at
-        # or below the stopper, so its count (and hence every
-        # descendant's) is <= c_stop < the accepted counts. Sequential
-        # greedy therefore picks exactly this prefix, in this order,
-        # with these counts. The strict gap also sidesteps tie-break
-        # races against descendants that tie an accepted count.
-        blocked: set[str] = set()
-        accepted: list[tuple[str, str, int]] = []
-        c_stop = None
-        for row in ranked:
-            a, b, cnt = row["left"], row["right"], int(row["pair_count"])
-            if len(accepted) >= want or a in blocked or b in blocked:
-                c_stop = cnt
+        # LAZY persist: the first pass's ranked-pairs collect materializes
+        # the cache as a side effect, so no separate count() job is ever
+        # paid — the parent handle is released only AFTER the child
+        # materialized (deferred release below), keeping lineage recompute
+        # impossible while halving the per-pass job count vs eager
+        # persist+count.
+        vocab = vocab.persist(StorageLevel.MEMORY_AND_DISK)
+
+        merges = []
+        n_passes = 0
+        while len(merges) < int(n_merges):
+            want = min(_BPE_BATCH_SIZE, int(n_merges) - len(merges))
+            ranked = (
+                _pair_counts(vocab)
+                .orderBy(
+                    F.col("pair_count").desc(),
+                    F.col("left").asc(),
+                    F.col("right").asc(),
+                )
+                .limit(want + 1)
+                .collect()
+            )
+            # this collect just materialized `vocab`'s cache; the parent
+            # handle (previous pass's vocab) is now safe to release
+            if prev is not None:
+                _release_frame(prev)
+                prev = None
+            if not ranked:
                 break
-            accepted.append((a, b, cnt))
-            blocked.update((a, b, a + b))
-        if c_stop is not None:
-            while len(accepted) > 1 and accepted[-1][2] <= c_stop:
-                accepted.pop()
-        for a, b, cnt in accepted:
-            merges.append((len(merges), a, b, cnt))
-        if len(merges) >= int(n_merges):
-            break  # table complete; skip the unused final rewrite
-        nxt = vocab
-        for a, b, _ in accepted:
-            nxt = _apply_merge(nxt, a, b)
-        n_passes += 1
-        if n_passes % int(checkpoint_every) == 0:
-            # eager: a checkpoint exists to CUT lineage now, and the cut
-            # must land before the parent chain is released
-            nxt = nxt.localCheckpoint(eager=True)
-            vocab.unpersist()
-        else:
-            # lazy persist; the NEXT pass's collect materializes it, after
-            # which `prev` (this pass's vocab) is released above
-            nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
-            prev = vocab
-        vocab = nxt
-    vocab.unpersist()
-    if prev is not None:
-        prev.unpersist()
-    if wc_handle is not None:
-        wc_handle.unpersist()
+            # Batch selection — PROVABLY identical to sequential greedy:
+            # accept the maximal ranked prefix whose pairs are pairwise
+            # non-interacting (no symbol of one appears as a symbol — or as
+            # the merged output l+r — of another), then truncate so every
+            # accepted pair beyond the first counts STRICTLY more than the
+            # first non-accepted row (c_stop). Why this is exact: applying
+            # disjoint merges leaves each other's counts unchanged, every
+            # DECREASED pair contains an accepted symbol, and every NEW pair
+            # (x, ab) is a subset of occurrences of an old pair (x, a) that
+            # interacts with the batch — and any interacting pair ranks at
+            # or below the stopper, so its count (and hence every
+            # descendant's) is <= c_stop < the accepted counts. Sequential
+            # greedy therefore picks exactly this prefix, in this order,
+            # with these counts. The strict gap also sidesteps tie-break
+            # races against descendants that tie an accepted count.
+            blocked: set[str] = set()
+            accepted: list[tuple[str, str, int]] = []
+            c_stop = None
+            for row in ranked:
+                a, b, cnt = row["left"], row["right"], int(row["pair_count"])
+                if len(accepted) >= want or a in blocked or b in blocked:
+                    c_stop = cnt
+                    break
+                accepted.append((a, b, cnt))
+                blocked.update((a, b, a + b))
+            if c_stop is not None:
+                while len(accepted) > 1 and accepted[-1][2] <= c_stop:
+                    accepted.pop()
+            for a, b, cnt in accepted:
+                merges.append((len(merges), a, b, cnt))
+            if len(merges) >= int(n_merges):
+                break  # table complete; skip the unused final rewrite
+            nxt = vocab
+            for a, b, _ in accepted:
+                nxt = _apply_merge(nxt, a, b)
+            n_passes += 1
+            if n_passes % _BPE_CHECKPOINT_EVERY == 0:
+                # eager: a checkpoint exists to CUT lineage now, and the
+                # cut must land before the parent chain is released
+                nxt = nxt.localCheckpoint(eager=True)
+                _release_frame(vocab)
+            else:
+                # lazy persist; the NEXT pass's collect materializes it,
+                # after which `prev` (this pass's vocab) is released above
+                nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
+                prev = vocab
+            vocab = nxt
+    finally:
+        for held in (prev, vocab, wc):
+            if held is not None:
+                _release_frame(held)
 
     return spark.createDataFrame(
         merges or [], "merge_idx int, left string, right string, pair_count long"

@@ -13,6 +13,18 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def persistent_rdds(spark):
+    """Callable: how many persistent RDDs registered since this fixture was
+    set up are still registered. Earlier tests can leave RDDs persisted,
+    and Spark's ContextCleaner frees those whenever the JVM happens to
+    collect garbage, so the count is taken over RDD ids, not as a
+    difference of totals."""
+    jrdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(jrdds().keySet())
+    return lambda: len(set(jrdds().keySet()) - before)
+
+
 @pytest.fixture(scope="session")
 def clf_xy():
     from powershap_spark.synth import parity_matrix

@@ -1019,115 +1019,6 @@ def test_signature_store_append_idempotent(spark, docs):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_bucketed_banded_store_parity_append_and_plan(spark, docs, tmp_path):
-    """write_banded_signature_store / incremental_minhash_dedup_bucketed:
-    (1) kept set identical to the unbucketed incremental path;
-    (2) appends are id-idempotent and keep the bucket layout usable;
-    (3) the store side of the old-vs-new band join is a bucketed scan with
-        ZERO exchange — only the new shard shuffles (the 10^12-scale
-        property the layout exists for, ANALYSIS_r06 §6)."""
-    import re
-
-    from powershap_spark.operators.dedup import (
-        _banded,
-        append_banded_signatures,
-        build_minhash_signature_store,
-        incremental_minhash_dedup,
-        incremental_minhash_dedup_bucketed,
-        write_banded_signature_store,
-    )
-
-    prefix = "t_banded_store"
-    for t in (f"{prefix}_bands", f"{prefix}_sigs"):
-        spark.sql(f"drop table if exists {t}")
-    try:
-        kw = dict(num_hashes=64, bands=16, threshold=0.5, shingle_n=2)
-        old = docs.filter(F.col("doc_id") < 3)
-        new = docs.filter(F.col("doc_id") >= 3)
-        store_sigs = build_minhash_signature_store(old, num_hashes=64, shingle_n=2)
-        write_banded_signature_store(
-            store_sigs, prefix, num_hashes=64, bands=16,
-            path=str(tmp_path / "store"),
-        )
-        kept_b, new_sigs = incremental_minhash_dedup_bucketed(
-            new, spark, prefix, **kw
-        )
-        kept_p, _ = incremental_minhash_dedup(new, store_sigs, **kw)
-        assert set(kept_b.toPandas().doc_id) == set(kept_p.toPandas().doc_id)
-
-        # (3) plan property, with auto-broadcast off so the join shape is
-        # the at-scale SortMergeJoin, not a toy-size broadcast
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            sb = spark.table(f"{prefix}_bands").withColumnRenamed(
-                "doc_id", "__id"
-            )
-            bn = _banded(new_sigs, "doc_id", "minhash", 16, 4, "xxhash")
-            j = sb.alias("a").join(
-                bn.alias("b"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.__id") < F.col("b.__id")),
-            )
-            ep = j._jdf.queryExecution().executedPlan()
-            if ep.nodeName() == "AdaptiveSparkPlan":
-                ep = ep.executedPlan()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-        def children(node):
-            c = node.children()
-            return [c.apply(i) for i in range(c.size())]
-
-        smj, todo = None, [ep]
-        while todo and smj is None:
-            node = todo.pop()
-            if node.nodeName() == "SortMergeJoin":
-                smj = node
-            todo.extend(children(node))
-        assert smj is not None, ep.toString()
-        sides = [c.toString() for c in children(smj)]
-        store = [t for t in sides if "Bucketed: true" in t]
-        assert len(store) == 1, ep.toString()
-        # store-side contract: the bucketed store is NEVER re-shuffled
-        assert "Exchange" not in store[0], store[0]
-        # shard side: the band-key shuffle plus the shard signature
-        # aggregation's hashpartitioning(doc_id) (explode+groupBy, one
-        # ~num_hashes*8B row per SHARD doc). The cached signatures print
-        # that one Exchange under their final and initial plans (two
-        # plan_ids), and the cached bands print both copies twice
-        (shard,) = [t for t in sides if "Bucketed: true" not in t]
-        ex_lines = [ln for ln in shard.splitlines() if "Exchange" in ln]
-        ex_ids = re.findall(r"Exchange .*\[plan_id=(\d+)\]", shard)
-        assert len(ex_ids) == len(ex_lines) == 5, shard
-        assert len(set(ex_ids)) == 3, shard
-        assert sum("hashpartitioning(band_id" in ln for ln in ex_lines) == 1, shard
-        assert all(
-            "hashpartitioning(band_id" in ln or "hashpartitioning(doc_id" in ln
-            for ln in ex_lines
-        ), shard
-
-        # (2) append: idempotent by id, both tables grow exactly once
-        n_bands = spark.table(f"{prefix}_bands").count()
-        n_sigs = spark.table(f"{prefix}_sigs").count()
-        append_banded_signatures(
-            spark, prefix, new_sigs, num_hashes=64, bands=16
-        )
-        grown_bands = spark.table(f"{prefix}_bands").count()
-        grown_sigs = spark.table(f"{prefix}_sigs").count()
-        assert grown_sigs == n_sigs + new_sigs.count()
-        assert grown_bands == n_bands + new_sigs.count() * 16
-        append_banded_signatures(  # retried shard: no-op
-            spark, prefix, new_sigs, num_hashes=64, bands=16
-        )
-        assert spark.table(f"{prefix}_bands").count() == grown_bands
-        assert spark.table(f"{prefix}_sigs").count() == grown_sigs
-    finally:
-        for t in (f"{prefix}_bands", f"{prefix}_sigs"):
-            spark.sql(f"drop table if exists {t}")
-
-
 def test_corpus_diff_statuses(spark):
     from powershap_spark.operators.dedup import corpus_diff
 
@@ -1399,14 +1290,62 @@ def test_tfidf_keywords_matches_reference(spark):
         tfidf_keywords(docs, k=0)
 
 
-def test_bpe_learn_matches_sennrich_reference(spark):
-    """Spark merge table == the classic single-process BPE (Sennrich
-    1508.07909: pair counts on the word dictionary, argmax with
-    (count desc, pair asc) tie-break, left-to-right non-overlapping
-    merge application), bit-exactly, plus early stop and determinism
-    across partitionings."""
+def _sennrich_reference(texts, n_merges):
+    """The classic single-process, one-merge-at-a-time BPE (Sennrich
+    1508.07909): pair counts on the word dictionary, argmax with (count
+    desc, pair asc) tie-break, left-to-right non-overlapping merge
+    application, early stop when no pair remains."""
     from collections import Counter
 
+    wc = Counter(w for t in texts for w in t.lower().split())
+    vocab = {w: (list(w), c) for w, c in wc.items()}
+    merges = []
+    for it in range(n_merges):
+        pc = Counter()
+        for _, (syms, c) in vocab.items():
+            for x, y in zip(syms, syms[1:]):
+                pc[(x, y)] += c
+        if not pc:
+            break
+        (a, b), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((it, a, b, cnt))
+        for w, (syms, c) in vocab.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            vocab[w] = (out, c)
+    return pd.DataFrame(
+        merges, columns=["merge_idx", "left", "right", "pair_count"]
+    )
+
+
+def _tie_heavy_texts(seed):
+    """40 docs of words built from 2-letter syllables over {a, b, c}: the
+    repeated word shapes force equal pair counts and interacting
+    candidates."""
+    import random
+
+    rng = random.Random(seed)
+    syll = ["ab", "ba", "ac", "ca", "bc", "cb", "aa", "bb"]
+    return [
+        " ".join(
+            "".join(rng.choice(syll) for _ in range(rng.randint(1, 4)))
+            for _ in range(rng.randint(3, 12))
+        )
+        for _ in range(40)
+    ]
+
+
+def test_bpe_learn_matches_sennrich_reference(spark, monkeypatch):
+    """Spark merge table == the classic single-process BPE, bit-exactly,
+    on both induction paths, plus early stop and determinism across
+    partitionings."""
+    from powershap_spark.operators import text
     from powershap_spark.operators.text import bpe_learn
 
     texts = [
@@ -1419,42 +1358,14 @@ def test_bpe_learn_matches_sennrich_reference(spark):
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
 
-    def reference(texts, n_merges):
-        wc = Counter(w for t in texts for w in t.lower().split())
-        vocab = {w: (list(w), c) for w, c in wc.items()}
-        merges = []
-        for it in range(n_merges):
-            pc = Counter()
-            for _, (syms, c) in vocab.items():
-                for x, y in zip(syms, syms[1:]):
-                    pc[(x, y)] += c
-            if not pc:
-                break
-            (a, b), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-            merges.append((it, a, b, cnt))
-            for w, (syms, c) in vocab.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                vocab[w] = (out, c)
-        return pd.DataFrame(
-            merges, columns=["merge_idx", "left", "right", "pair_count"]
-        )
-
     # BOTH induction paths must match the reference bit-exactly: the
-    # driver-local fast path (auto picks it — the dictionary is tiny)
-    # and the distributed batched loop (forced)
-    got = bpe_learn(docs, n_merges=10, checkpoint_every=3).toPandas()
-    exp = reference(texts, 10)
+    # driver-local path (the dictionary is tiny) and the distributed
+    # batched loop (a zero budget), with a checkpoint every 3 passes
+    got = bpe_learn(docs, n_merges=10).toPandas()
+    exp = _sennrich_reference(texts, 10)
     assert got.astype(str).values.tolist() == exp.astype(str).values.tolist()
-    dist = bpe_learn(
-        docs, n_merges=10, checkpoint_every=3, mode="distributed"
-    ).toPandas()
+    monkeypatch.setattr(text, "_BPE_CHECKPOINT_EVERY", 3)
+    dist = bpe_learn(docs, n_merges=10, max_local_vocab=0).toPandas()
     assert dist.astype(str).values.tolist() == exp.astype(str).values.tolist()
 
     # layout invariance: the argmax chain is partitioning-independent
@@ -1472,75 +1383,44 @@ def test_bpe_learn_matches_sennrich_reference(spark):
 
 
 def test_bpe_learn_batched_equals_sequential(spark):
-    """The batched merge selection (up to batch_size pairwise
-    non-interacting merges per vocab rewrite pass, strict count gap to
-    the first excluded row) must be BIT-IDENTICAL to the textbook
-    one-merge-per-pass loop — on a tie-heavy deterministic corpus whose
-    repeated word shapes force equal pair counts and interacting
-    candidates (the cases the gap-truncation exists for)."""
-    import random
-
+    """The distributed loop's batched merge selection (up to
+    ``_BPE_BATCH_SIZE`` pairwise non-interacting merges per vocab rewrite
+    pass, strict count gap to the first excluded row) must be
+    BIT-IDENTICAL to sequential greedy — the python reference — on a
+    tie-heavy corpus (the cases the gap-truncation exists for)."""
     from powershap_spark.operators.text import bpe_learn
 
-    rng = random.Random(11)
-    syll = ["ab", "ba", "ac", "ca", "bc", "cb", "aa", "bb"]
-    texts = [
-        " ".join(
-            "".join(rng.choice(syll) for _ in range(rng.randint(1, 4)))
-            for _ in range(rng.randint(3, 12))
-        )
-        for _ in range(40)
-    ]
+    texts = _tie_heavy_texts(11)
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    # batching is a distributed-loop concept: force mode so the loop
-    # stays covered now that auto picks the driver-local path here
-    seq = bpe_learn(docs, n_merges=24, batch_size=1, mode="distributed").toPandas()
-    for bs in (2, 4, 8):
-        got = bpe_learn(
-            docs, n_merges=24, batch_size=bs, mode="distributed"
-        ).toPandas()
-        assert got.values.tolist() == seq.values.tolist(), f"batch_size={bs}"
-    with pytest.raises(ValueError):
-        bpe_learn(docs, n_merges=3, batch_size=0)
+    got = bpe_learn(docs, n_merges=24, max_local_vocab=0).toPandas()
+    exp = _sennrich_reference(texts, 24)
+    assert got.astype(str).values.tolist() == exp.astype(str).values.tolist()
 
 
 def test_bpe_learn_local_equals_distributed(spark):
-    """mode='auto'/'local' (driver-local exact Sennrich induction over the
-    collected word dictionary, VERDICT r7 #3) must be bit-identical to the
-    distributed loop on the tie-heavy corpus, and the auto probe must fall
-    back to distributed when the dictionary overflows max_local_vocab."""
-    import random
-
+    """The driver-local exact Sennrich induction over the collected word
+    dictionary must be bit-identical to the distributed loop on the
+    tie-heavy corpus, whichever side of the ``max_local_vocab`` budget the
+    dictionary falls."""
     from powershap_spark.operators.text import bpe_learn
 
-    rng = random.Random(23)
-    syll = ["ab", "ba", "ac", "ca", "bc", "cb", "aa", "bb"]
-    texts = [
-        " ".join(
-            "".join(rng.choice(syll) for _ in range(rng.randint(1, 4)))
-            for _ in range(rng.randint(3, 12))
-        )
-        for _ in range(40)
-    ]
+    texts = _tie_heavy_texts(23)
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    dist = bpe_learn(docs, n_merges=24, mode="distributed").toPandas()
-    loc = bpe_learn(docs, n_merges=24, mode="local").toPandas()
-    auto = bpe_learn(docs, n_merges=24, mode="auto").toPandas()
+    n_words = len({w for t in texts for w in t.split()})
+    dist = bpe_learn(docs, n_merges=24, max_local_vocab=0).toPandas()
+    # a budget the dictionary exactly fills still takes the local path
+    loc = bpe_learn(docs, n_merges=24, max_local_vocab=n_words).toPandas()
+    auto = bpe_learn(docs, n_merges=24).toPandas()
     assert loc.values.tolist() == dist.values.tolist()
     assert auto.values.tolist() == dist.values.tolist()
 
-    # overflow: a 1-row budget forces the distributed fallback (auto) /
-    # a loud error (local)
-    over = bpe_learn(docs, n_merges=6, mode="auto", max_local_vocab=1).toPandas()
+    # overflow: a 1-row budget falls back to the distributed loop
+    over = bpe_learn(docs, n_merges=6, max_local_vocab=1).toPandas()
     assert over.values.tolist() == dist.head(6).values.tolist()
-    with pytest.raises(ValueError):
-        bpe_learn(docs, n_merges=6, mode="local", max_local_vocab=1)
-    with pytest.raises(ValueError):
-        bpe_learn(docs, n_merges=6, mode="nope")
 
     # Unicode symbol-split parity: NEL/LS/PS survive \s+ tokenization but
     # Java's '.' (the distributed regexp_extract_all symbol split) skips
@@ -1549,8 +1429,8 @@ def test_bpe_learn_local_equals_distributed(spark):
     udocs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(utexts)), "text": utexts})
     )
-    ud = bpe_learn(udocs, n_merges=8, mode="distributed").toPandas()
-    ul = bpe_learn(udocs, n_merges=8, mode="local").toPandas()
+    ud = bpe_learn(udocs, n_merges=8, max_local_vocab=0).toPandas()
+    ul = bpe_learn(udocs, n_merges=8).toPandas()
     assert ul.values.tolist() == ud.values.tolist()
 
 
